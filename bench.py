@@ -15,17 +15,23 @@ bottleneck on driver serialization — neither measures the query. Each query
 runs once untimed (one-time codegen/JIT compile excluded), then
 ``$SPARK_GRAFT_BENCH_REPS`` timed reps (default 3) keeping the best —
 steady-state throughput, which is what a long-running cluster job sees.
+
+``prepare``, ``best_of`` and ``ab`` are the one home of this protocol:
+tools/qbench.py and the sweeps import them rather than copy them.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+log = logging.getLogger("bench")
 
 # Headliners: one per operator family — TPC-H scan/agg/join shapes, the
 # corpus analytics (window, join-audit, time-share), and the
@@ -99,6 +105,80 @@ HEADLINERS = (
     "tx33_curation_funnel",
 )
 
+
+def prepare(spark, sf_dir: str) -> None:
+    """Untimed scaffolding every timing in this repo runs behind."""
+    # JVM/codegen warm-up outside the timed region: a scan + shuffle agg +
+    # broadcast join + window over the small dims exercises the codegen,
+    # shuffle, and parquet reader paths the first timed query would
+    # otherwise pay cold (a bare range-sum left tpch_q1's first rep up to
+    # 3x noisy)
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    from impala_workload_analyzer_spark.io import load_table
+    warm_n = load_table(spark, sf_dir, "nation")
+    warm_c = load_table(spark, sf_dir, "customer")
+    (
+        warm_c.join(warm_n, warm_c.c_nationkey == warm_n.n_nationkey)
+        .groupBy("n_name").count()
+        .selectExpr("n_name", "count",
+                    "rank() over (order by count desc, n_name) as r")
+        .write.format("noop").mode("overwrite").save()
+    )
+    # corpus materialization and profile-log rendering are INGEST-side
+    # scaffolding (EP1 inputs), not analytics: build once outside the timed
+    # region, like the reference's profile_analyzer run precedes its stats
+    # scripts (driver.sh:5-17). ing1's timed portion is the actual ingest
+    # (decode + parse + harvest), which reads the rendered logs.
+    from impala_workload_analyzer_spark.corpus.builder import ensure_corpus
+    from impala_workload_analyzer_spark.io import ensure_scan_cache
+    from impala_workload_analyzer_spark.sources.profile_render import ensure_profiles
+    from impala_workload_analyzer_spark.sources.profiles import materialized_table
+    ensure_scan_cache(spark, sf_dir)
+    ensure_corpus(spark, sf_dir)
+    ensure_profiles(spark, sf_dir)
+    for table in ("queries", "operators"):  # S8 sink the consumers read
+        materialized_table(spark, sf_dir, table)
+
+
+def best_of(build, reps: int) -> list[float]:
+    """The ONE timing protocol every published number uses: one untimed
+    warm-up drain (janino codegen/JIT is a one-time cost), then ``reps``
+    timed noop-format drains. Returns every rep; bench publishes the min."""
+    build().write.format("noop").mode("overwrite").save()
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        times.append(round(time.perf_counter() - t0, 4))
+    return times
+
+
+def ab(spark, current, variant, reps: int) -> tuple[list[float], list[float]]:
+    """Same-session A/B of two builds under the ``best_of`` drain.
+
+    Raises ValueError before any timing unless ``exceptAll`` is empty in
+    both directions. After one untimed warm-up per side the reps
+    interleave, alternating which side runs first, so host drift lands
+    on both sides alike. Returns (current reps, variant reps)."""
+    a, b = current(), variant()
+    diff = (a.exceptAll(b).count(), b.exceptAll(a).count())
+    if diff != (0, 0):
+        raise ValueError(f"outputs differ: exceptAll {diff[0]}/{diff[1]}")
+    sides = {"current": current, "variant": variant}
+    times: dict[str, list[float]] = {side: [] for side in sides}
+    for build in sides.values():
+        build().write.format("noop").mode("overwrite").save()
+    for r in range(reps):
+        order = list(sides) if r % 2 == 0 else list(reversed(sides))
+        for side in order:
+            spark.sparkContext.setJobDescription(f"ab:{side}:rep{r}")
+            t0 = time.perf_counter()
+            sides[side]().write.format("noop").mode("overwrite").save()
+            times[side].append(round(time.perf_counter() - t0, 4))
+    spark.sparkContext.setJobDescription(None)
+    return times["current"], times["variant"]
+
+
 # The session-persisted shared frames (the feature-store pattern: ground
 # truth / component labels / verified pairs materialized once per corpus
 # snapshot). Their one-time build cost used to hide in the first
@@ -161,59 +241,17 @@ def main() -> int:
 
     spark = get_spark("bench")
     qs = entrymod.queries()
-    # JVM/codegen warm-up outside the timed region: a scan + shuffle agg +
-    # broadcast join + window over the small dims exercises the codegen,
-    # shuffle, and parquet reader paths the first timed query would
-    # otherwise pay cold (a bare range-sum left tpch_q1's first rep up to
-    # 3x noisy)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from impala_workload_analyzer_spark.io import load_table
-    warm_n = load_table(spark, sf_dir, "nation")
-    warm_c = load_table(spark, sf_dir, "customer")
-    (
-        warm_c.join(warm_n, warm_c.c_nationkey == warm_n.n_nationkey)
-        .groupBy("n_name").count()
-        .selectExpr("n_name", "count",
-                    "rank() over (order by count desc, n_name) as r")
-        .write.format("noop").mode("overwrite").save()
-    )
-    # corpus materialization and profile-log rendering are INGEST-side
-    # scaffolding (EP1 inputs), not analytics: build once outside the timed
-    # region, like the reference's profile_analyzer run precedes its stats
-    # scripts (driver.sh:5-17). ing1's timed portion is the actual ingest
-    # (decode + parse + harvest), which reads the rendered logs.
-    from impala_workload_analyzer_spark.corpus.builder import ensure_corpus
-    from impala_workload_analyzer_spark.io import ensure_scan_cache
-    from impala_workload_analyzer_spark.sources.profile_render import ensure_profiles
-    from impala_workload_analyzer_spark.sources.profiles import materialized_table
-    ensure_scan_cache(spark, sf_dir)
-    ensure_corpus(spark, sf_dir)
-    ensure_profiles(spark, sf_dir)
-    for table in ("queries", "operators"):  # S8 sink the consumers read
-        materialized_table(spark, sf_dir, table)
+    prepare(spark, sf_dir)
 
     names = [n for n in HEADLINERS if n in qs]
     extra = [n for n in HEADLINERS if n not in qs]
     if extra:
-        print(f"WARN missing headliners: {extra}", file=sys.stderr)
+        log.warning("missing headliners: %s", extra)
 
     timings: dict[str, float] = {}
 
-    def _best_of(build, n_reps: int) -> float:
-        # the ONE timing protocol every published number uses: one
-        # untimed warm-up drain (janino codegen/JIT is a one-time
-        # cost), then best-of-n_reps timed noop-format drains
-        build().write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(n_reps):
-            t0 = time.perf_counter()
-            build().write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 4)
-
     def bench_one(name: str) -> None:
-        timings[name] = _best_of(lambda: qs[name](spark, sf_dir), reps)
+        timings[name] = min(best_of(lambda: qs[name](spark, sf_dir), reps))
 
     # dd3/sim1 run BEFORE the shared-frame builds: their live lineages
     # EQUAL two build plans, and CacheManager substitutes cached
@@ -258,9 +296,8 @@ def main() -> int:
             continue
         jdf = qs[name](spark, sf_dir)._jdf
         if cache_mgr.lookupCachedData(jdf).isDefined():
-            print(f"WARN {name}: full plan is cache-resident post-build; "
-                  f"add it to the prebuild list to time it cold",
-                  file=sys.stderr)
+            log.warning("%s: full plan is cache-resident post-build; "
+                        "add it to the prebuild list to time it cold", name)
         bench_one(name)
 
     # Per-tier attribution for the multi-tier comparison headliners
@@ -284,7 +321,7 @@ def main() -> int:
         if host not in timings:
             continue
         tier_timings[host] = {
-            tname: _best_of(lambda f=fn: f(spark, sf_dir), 2)
+            tname: min(best_of(lambda f=fn: f(spark, sf_dir), 2))
             for tname, fn in tiers.items()
         }
 

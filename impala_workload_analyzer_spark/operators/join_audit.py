@@ -8,9 +8,9 @@ two (side, child_id) rows and resolves both against ``operators`` in ONE
 corpus-sized children frame twice; the unpivot trades the second
 children exchange for a joins-sized re-pivot exchange, marginal at
 sf0.1 (1.67 vs 1.84 s) and 1.58x faster at the 10x key-offset corpus
-(4.84 vs 3.06 s, tools/a9_ab.py — the r15 verdict's requested sf1 A/B),
-because the saved exchange grows with the corpus while the re-pivot
-stays join-count-sized.
+(4.84 vs 3.06 s, the r15 verdict's requested sf1 A/B; OPTIMIZATION_r16.md
+records the measurement), because the saved exchange grows with the
+corpus while the re-pivot stays join-count-sized.
 
 Cost model (joins.py:5-30, audited exactly):
 
@@ -34,7 +34,11 @@ from ..corpus import IDIV, corpus_operators, corpus_queries, with_corpus
 
 def _classified_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = corpus_queries(spark, sf_dir).filter(F.col("tag") == "tpch").select("query_id")
-    ops = corpus_operators(spark, sf_dir)
+    return _classify(corpus_operators(spark, sf_dir), q)
+
+
+def _classify(ops: DataFrame, q: DataFrame) -> DataFrame:
+    """Audit every join in ``ops`` whose query is in ``q``."""
     joins = ops.filter(F.col("name").isin("HASH JOIN", "CROSS JOIN")).join(q, "query_id")
     children = ops.select(
         "query_id",
@@ -44,9 +48,10 @@ def _classified_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Unpivot: each join contributes (side, child_id) rows, resolved in
     # one (query_id, child_id) join; the re-pivot groups by the join's
     # own key ((query_id, id) is unique, so the carried attributes ride
-    # the group-by key). The both-sides-not-null filter reproduces the
+    # the group-by key). The both-sides-matched filter reproduces the
     # double inner join's semantics: a join whose left OR right child is
-    # unresolvable is out of the audit either way.
+    # unresolvable is out of the audit, while a resolved child with NULL
+    # num_rows/row_size stays in with NULL bytes.
     sides = joins.select(
         "query_id", "id", "name", "join_impl", "num_hosts", "avg_time",
         F.explode(
@@ -67,8 +72,10 @@ def _classified_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("left_bytes"),
             F.max(F.when(F.col("side") == "r", F.col("child_bytes")))
             .alias("right_bytes"),
+            F.count(F.when(F.col("side") == "l", 1)).alias("left_matches"),
+            F.count(F.when(F.col("side") == "r", 1)).alias("right_matches"),
         )
-        .filter(F.col("left_bytes").isNotNull() & F.col("right_bytes").isNotNull())
+        .filter((F.col("left_matches") > 0) & (F.col("right_matches") > 0))
     )
     bcost = F.least("left_bytes", "right_bytes") * F.col("num_hosts")
     pcost = F.col("left_bytes") + F.col("right_bytes")

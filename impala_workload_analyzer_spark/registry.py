@@ -34,6 +34,7 @@ rotation category (a) — the dd27/ts2 convention.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -135,22 +136,40 @@ _PRIORITY = (
 )
 
 
-def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    from .operators import (  # noqa: PLC0415
-        concurrency,
-        consistency,
-        join_audit,
-        preagg,
-        time_share,
-        workload_stats,
-    )
+# Every module that defines SPARK_QUERIES / ORACLES, in registration
+# order. Imported unconditionally: a module that fails to import fails
+# the registry loudly instead of dropping its query family
+# (tests/test_registry.py checks this tuple against the package).
+_MODULES = (
+    "impala_workload_analyzer_spark.operators.workload_stats",
+    "impala_workload_analyzer_spark.operators.join_audit",
+    "impala_workload_analyzer_spark.operators.preagg",
+    "impala_workload_analyzer_spark.operators.concurrency",
+    "impala_workload_analyzer_spark.operators.consistency",
+    "impala_workload_analyzer_spark.operators.time_share",
+    "impala_workload_analyzer_spark.tpch",
+    "impala_workload_analyzer_spark.tpch_full",
+    "impala_workload_analyzer_spark.functions.unit_queries",
+    "impala_workload_analyzer_spark.functions.bitcast",
+    "impala_workload_analyzer_spark.pipeline.dedup",
+    "impala_workload_analyzer_spark.pipeline.text",
+    "impala_workload_analyzer_spark.pipeline.similarity",
+    "impala_workload_analyzer_spark.pipeline.events_analytics",
+    "impala_workload_analyzer_spark.pipeline.multimodal",
+    "impala_workload_analyzer_spark.streaming.stream_queries",
+    "impala_workload_analyzer_spark.ml.clustering",
+    "impala_workload_analyzer_spark.sources.profiles",
+    "impala_workload_analyzer_spark.sources.time_series_queries",
+    "impala_workload_analyzer_spark.sql_introspect.queries",
+    "impala_workload_analyzer_spark.plans.draw_plan",
+)
 
-    modules = [workload_stats, join_audit, preagg, concurrency, consistency, time_share]
-    for extra in _optional_modules():
-        modules.append(extra)
+
+def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
-    for mod in modules:
+    for dotted in _MODULES:
+        mod = importlib.import_module(dotted)
         for name, fn in getattr(mod, "SPARK_QUERIES", {}).items():
             if name in queries:
                 raise ValueError(f"duplicate query name: {name}")
@@ -164,34 +183,6 @@ def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
         if name not in ordered:
             ordered[name] = fn
     return ordered, oracles
-
-
-def _optional_modules():
-    mods = []
-    import importlib  # noqa: PLC0415
-
-    for dotted in (
-        "impala_workload_analyzer_spark.tpch",
-        "impala_workload_analyzer_spark.tpch_full",
-        "impala_workload_analyzer_spark.functions.unit_queries",
-        "impala_workload_analyzer_spark.functions.bitcast",
-        "impala_workload_analyzer_spark.pipeline.dedup",
-        "impala_workload_analyzer_spark.pipeline.text",
-        "impala_workload_analyzer_spark.pipeline.similarity",
-        "impala_workload_analyzer_spark.pipeline.events_analytics",
-        "impala_workload_analyzer_spark.pipeline.multimodal",
-        "impala_workload_analyzer_spark.streaming.stream_queries",
-        "impala_workload_analyzer_spark.ml.clustering",
-        "impala_workload_analyzer_spark.sources.profiles",
-        "impala_workload_analyzer_spark.sources.time_series_queries",
-        "impala_workload_analyzer_spark.sql_introspect.queries",
-        "impala_workload_analyzer_spark.plans.draw_plan",
-    ):
-        try:
-            mods.append(importlib.import_module(dotted))
-        except ModuleNotFoundError:
-            continue
-    return mods
 
 
 def all_queries() -> dict[str, QueryFn]:

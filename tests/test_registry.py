@@ -46,3 +46,23 @@ def test_priority_has_no_duplicates():
         n for n in registry._PRIORITY if n in seen or seen.add(n)
     )
     assert not dups, f"duplicate _PRIORITY entries: {dups}"
+
+
+def test_every_query_module_is_registered():
+    """The registry imports a fixed module tuple; a new module defining
+    SPARK_QUERIES that is missing from it would register nothing."""
+    import importlib
+    import pkgutil
+
+    import impala_workload_analyzer_spark as pkg
+    from impala_workload_analyzer_spark import registry
+
+    defining = sorted(
+        info.name
+        for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+        if not info.name.endswith(".__main__")
+        and hasattr(importlib.import_module(info.name), "SPARK_QUERIES")
+    )
+    assert defining, "walk found no query modules"
+    missing = sorted(set(defining) - set(registry._MODULES))
+    assert not missing, f"query modules absent from registry._MODULES: {missing}"

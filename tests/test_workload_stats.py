@@ -329,7 +329,7 @@ def test_join_audit_matches_reference_n_plus_1(spark, sf_dir):
     (joins.py:51-65) — per join, resolve left/right child rows by
     (query_id, id); a join with EITHER child unresolvable is out of the
     audit (the double inner join's semantics the unpivot's
-    both-sides-not-null filter must reproduce); classify with the exact
+    both-sides-matched filter must reproduce); classify with the exact
     cost model and floor-divide the ms rollup."""
     from impala_workload_analyzer_spark.operators.join_audit import (
         join_audit_rollup,
@@ -385,3 +385,51 @@ def test_join_audit_matches_reference_n_plus_1(spark, sf_dir):
     }
     want_rollup = {c: (n, t // 1_000_000) for c, (n, t) in rollup.items()}
     assert got_rollup == want_rollup
+
+
+def test_join_audit_keeps_null_counter_children(spark):
+    """a9/j2 resolution vs NULL counters: a join whose child resolves but
+    carries NULL num_rows/row_size stays in the audit with NULL bytes,
+    as the oracle's double inner join keeps it; a join with an
+    unresolvable child drops out. Spark and the DuckDB oracle agree on a
+    hand-built corpus with one of each."""
+    import duckdb
+
+    from impala_workload_analyzer_spark.operators.join_audit import (
+        _CLASSIFIED,
+        _classify,
+    )
+
+    ops = [
+        ("q1", 1, "HASH JOIN", "BROADCAST", 3, 5_000_000, 2, 3, 1, 64),
+        ("q1", 2, "HDFS_SCAN_NODE", None, 3, 1, None, None, None, None),
+        ("q1", 3, "HDFS_SCAN_NODE", None, 3, 1, None, None, 10, 8),
+        ("q1", 4, "HASH JOIN", "PARTITIONED", 2, 7_000_000, 3, 99, 1, 64),
+        ("q1", 5, "HASH JOIN", "PARTITIONED", 2, 9_000_000, 3, 6, 1, 64),
+        ("q1", 6, "HDFS_SCAN_NODE", None, 2, 1, None, None, 100, 4),
+    ]
+    ddl = ("query_id STRING, id BIGINT, name STRING, join_impl STRING, "
+           "num_hosts BIGINT, avg_time BIGINT, left_child_id BIGINT, "
+           "right_child_id BIGINT, num_rows BIGINT, row_size BIGINT")
+    got = {
+        (r["query_id"], r["id"], r["left_bytes"], r["right_bytes"],
+         r["classification"])
+        for r in _classify(
+            spark.createDataFrame(ops, ddl),
+            spark.createDataFrame([("q1",)], "query_id STRING"),
+        ).collect()
+    }
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE iwa_operators ({ddl.replace('STRING', 'VARCHAR')})")
+    con.executemany(
+        f"INSERT INTO iwa_operators VALUES ({', '.join('?' * len(ops[0]))})", ops)
+    con.execute("CREATE TABLE iwa_queries AS SELECT 'q1' AS query_id, 'tpch' AS tag")
+    want = set(con.execute(
+        "WITH unused AS (SELECT 1)" + _CLASSIFIED
+        + "SELECT query_id, id, left_bytes, right_bytes, classification FROM jc"
+    ).fetchall())
+
+    assert got == want
+    assert {row[1] for row in got} == {1, 5}  # 4's right child is unresolvable
+    assert ("q1", 1, None, 80, "wrong_impl") in got

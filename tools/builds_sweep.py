@@ -34,9 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sf1_sweep import DST, SRC, ensure_sf1  # noqa: E402
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from tools.sf1_sweep import DST, SRC, ensure_sf1  # noqa: E402
 
 
 def _builds():

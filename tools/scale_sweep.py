@@ -1,6 +1,7 @@
 """Measured scaling sweep: times representative queries of the hottest
-families at sf0.001 / sf0.01 / sf0.1 under the bench drain protocol
-(untimed warm-up, then best-of-2 noop-format writes) and reports the
+families at sf0.001 / sf0.01 / sf0.1 under the bench protocol
+(``bench.prepare`` per scale, then ``bench.best_of`` with 2 reps, min
+kept) and reports the
 fitted per-decade scaling exponent alpha where t ~ sf^alpha
 (alpha = log10(t_hi/t_lo) per decade, averaged over the two decades).
 
@@ -18,7 +19,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,34 +38,18 @@ def main() -> int:
     names = sys.argv[1:] or list(DEFAULTS)
 
     import __spark_entry__ as entrymod
-    from impala_workload_analyzer_spark.corpus.builder import ensure_corpus
-    from impala_workload_analyzer_spark.io import ensure_scan_cache, load_table
+    from bench import best_of, prepare
     from impala_workload_analyzer_spark.session import get_spark
-    from impala_workload_analyzer_spark.sources.profile_render import ensure_profiles
-    from impala_workload_analyzer_spark.sources.profiles import materialized_table
 
     spark = get_spark("scale-sweep")
     qs = entrymod.queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     out: dict[str, dict] = {}
     for sf_dir in SF_DIRS:
-        # ingest-side scaffolding outside the timed region (bench protocol)
-        ensure_scan_cache(spark, sf_dir)
-        ensure_corpus(spark, sf_dir)
-        ensure_profiles(spark, sf_dir)
-        for table in ("queries", "operators"):
-            materialized_table(spark, sf_dir, table)
-        load_table(spark, sf_dir, "nation").count()
+        prepare(spark, sf_dir)
         for name in names:
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            out.setdefault(name, {})[os.path.basename(sf_dir)] = round(best, 4)
+            best = min(best_of(lambda: qs[name](spark, sf_dir), 2))
+            out.setdefault(name, {})[os.path.basename(sf_dir)] = best
 
     result = {}
     for name, t in out.items():

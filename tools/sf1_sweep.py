@@ -14,10 +14,11 @@ profile-ingest tables are not replicated (their corpus scaffolding is
 derived data); the sweep covers the dedup / similarity / text / events
 families, where SCALE.md's 100 TB arguments live.
 
-Timing protocol matches tools/scale_sweep.py: untimed warm-up, then
-best-of-2 noop-format full drains; alpha = log10(t_sf1 / t_sf0.1) is the
-fitted exponent for the new decade (1 = linear). Prints one JSON line;
-the SCALE.md appendix records the result.
+Timing protocol matches tools/scale_sweep.py: ``bench.best_of`` with 2
+reps (untimed warm-up, then noop-format full drains), min kept;
+alpha = log10(t_sf1 / t_sf0.1) is the fitted exponent for the new decade
+(1 = linear). Prints one JSON line; the SCALE.md appendix records the
+result.
 
 Usage: python tools/sf1_sweep.py [query ...]
 """
@@ -28,7 +29,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -111,14 +111,16 @@ def main() -> int:
     ensure_sf1()
 
     import __spark_entry__ as entrymod
+    from bench import best_of, prepare
+    from impala_workload_analyzer_spark.cache_util import evict_session_frames
     from impala_workload_analyzer_spark.io import scan_cache_dir
     from impala_workload_analyzer_spark.session import get_spark
 
     spark = get_spark("sf1-sweep")
     qs = entrymod.queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    from impala_workload_analyzer_spark.cache_util import evict_session_frames
+    # JVM warm-up plus the sf0.1 scaffolding; the sf1 copy holds only the
+    # replicated tables, so it gets just the scan caches built below
+    prepare(spark, SRC)
 
     out: dict[str, dict] = {}
     for sf_dir, tag in ((SRC, "sf0.1"), (DST, "sf1")):
@@ -129,15 +131,8 @@ def main() -> int:
         for table in ("documents", "events", "embeddings"):
             scan_cache_dir(spark, sf_dir, table)  # build outside timed region
         for name in names:
-            print(f"# {tag} {name} warm-up", file=sys.stderr, flush=True)
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            out.setdefault(name, {})[tag] = round(best, 4)
+            best = min(best_of(lambda: qs[name](spark, sf_dir), 2))
+            out.setdefault(name, {})[tag] = best
             print(f"# {tag} {name} best={best:.3f}s", file=sys.stderr, flush=True)
 
     result = {}
