@@ -1,18 +1,40 @@
-"""Validity stamping for the derived-data caches.
+"""The one cache layer: where derived data lives and how session results
+are memoized. No other module builds a cache path or keeps a memo dict.
 
-The corpus / rendered-profile / ingest / feature caches are deterministic
-functions of (fixture parquet, generator source code). They are committed
-to the repo for the driver-correctness scale (sf0.01) so a cold checkout
-starts warm — the single biggest cold-start cost was first-touch
-materialization (corpus build + 15k-profile render + ingest parse), not
-query execution.
+Three kinds of cache, each with one key and one invalidation rule:
 
-Safety: each cache root carries a FINGERPRINT file — an md5 over every
-source module whose logic shapes cache content. ``is_valid`` rejects a
-cache written by different source, so editing the renderer/parser/corpus
-SQL auto-invalidates (the old failure mode was silently-stale caches that
-only surfaced as oracle mismatches). Fixture parquet is immutable test
-data, so it is not part of the fingerprint.
+- **Disk caches** — ``cache_dir(kind, sf_dir, *parts)`` is
+  ``<repo>/.<kind>_cache/<basename(sf_dir)>/<parts…>``, keyed by the
+  fixture directory's basename:
+
+  - ``.corpus_cache`` — the queries/operators/fragments corpus tables;
+  - ``.profiles_cache`` — the rendered profile log lines;
+  - ``.ingest_cache`` — the parsed (materialized) ingest tables;
+  - ``.features_cache`` — the m0 feature table KMeans fits read;
+  - ``.export_cache`` — sink outputs (snk1-snk7), overwritten by every
+    run and never stamped: they are results, not inputs.
+
+  The first four are deterministic functions of (fixture parquet,
+  generator source) and are invalidated by the source fingerprint:
+  ``build_once`` writes a ``_FINGERPRINT`` stamp (an md5 over every source
+  module whose logic shapes cache content) and rebuilds whenever the
+  stamp differs, so editing the renderer/parser/corpus SQL can never leave
+  a silently-stale cache. Fixture parquet is immutable test data, so it is
+  not part of the fingerprint. The sf0.001/sf0.01 copies are committed so
+  a cold checkout starts warm (first-touch materialization, not query
+  execution, was the biggest cold-start cost).
+- **Scan cache** — ``.scan_cache`` (``io.scan_cache_dir``) is keyed by the
+  fixture file's content signature, file-locked while building and pruned
+  of superseded versions; that protocol lives in ``io``.
+- **Session memos** — ``session_memo`` / ``session_persisted`` are keyed
+  by ``(applicationId, normpath(sf_dir), tag)`` and live for one Spark
+  session (Spark SQL treats a persisted DataFrame as session state).
+  ``applicationId`` is stable for a session's life and never reused —
+  unlike ``id(spark)``, which a new session can inherit from a stopped,
+  garbage-collected one, handing it frames bound to the dead session. A
+  miss evicts every other session's entries (best-effort unpersist), so a
+  replaced session never pins executor memory for process lifetime.
+  Correctness never depends on a memo: a cold call rebuilds.
 """
 
 from __future__ import annotations
@@ -21,6 +43,7 @@ import hashlib
 import os
 
 _PKG = os.path.dirname(os.path.abspath(__file__))
+_REPO = os.path.dirname(_PKG)
 
 # every source file whose logic shapes the content of ANY derived cache;
 # one shared fingerprint keeps the invalidation story simple (a corpus
@@ -50,6 +73,12 @@ def fingerprint() -> str:
     return h.hexdigest()
 
 
+def cache_dir(kind: str, sf_dir: str, *parts: str) -> str:
+    """``<repo>/.<kind>_cache/<basename(sf_dir)>/<parts…>``."""
+    return os.path.join(_REPO, f".{kind}_cache",
+                        os.path.basename(os.path.normpath(sf_dir)), *parts)
+
+
 def is_valid(root: str, *subdirs: str) -> bool:
     """True iff every _SUCCESS marker exists under ``root`` (or its
     ``subdirs``) and the stamp matches the current source fingerprint."""
@@ -67,57 +96,59 @@ def is_valid(root: str, *subdirs: str) -> bool:
         return f.read().strip() == fingerprint()
 
 
-def stamp(root: str) -> None:
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, _STAMP), "w") as f:
-        f.write(fingerprint())
+def build_once(root: str, build, *subdirs: str) -> str:
+    """Return ``root``, first running the zero-arg ``build`` (which writes
+    the dataset(s) there) and stamping the result unless ``root`` is
+    already valid for the current source fingerprint."""
+    if not is_valid(root, *subdirs):
+        build()
+        os.makedirs(root, exist_ok=True)
+        with open(os.path.join(root, _STAMP), "w") as f:
+            f.write(fingerprint())
+    return root
 
 
-# --- session-scoped persisted-DataFrame cache -------------------------------
-#
-# The shared intermediates (shingle frame, exact top-k, KMeans memos) are
-# persisted once per (session, corpus). Keying by ``id(spark)`` was a trap:
-# after a session is stopped and GC'd, a new session can reuse the same id
-# and receive a frame bound to the dead session, and dead entries pinned
-# executor memory for process lifetime. ``applicationId`` is stable for a
-# session's life and never reused, so it is the correct identity; entries
-# belonging to any other (replaced) session are evicted with a best-effort
-# unpersist on the next miss.
+_MEMO: dict[tuple[str, str, str], object] = {}
 
-_DF_CACHE: dict[tuple[str, str, str], object] = {}
+
+def _release(value, blocking: bool = False) -> None:
+    if hasattr(value, "unpersist"):
+        try:
+            value.unpersist(blocking)
+        except Exception:  # noqa: BLE001 — dead session; nothing to free
+            pass
+
+
+def session_memo(spark, sf_dir: str, tag: str, build):
+    """Build-once-per-(session, corpus) value: ``build`` is a zero-arg
+    callable, run on a miss; entries of any other session are evicted."""
+    app = spark.sparkContext.applicationId
+    key = (app, os.path.normpath(sf_dir), tag)
+    if key not in _MEMO:
+        for stale in [k for k in _MEMO if k[0] != app]:
+            _release(_MEMO.pop(stale))
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def session_persisted(spark, sf_dir: str, tag: str, build):
-    """Build-once-per-(session, corpus) persisted DataFrame.
+    """``session_memo`` of the DataFrame ``build()`` returns, persisted
+    MEMORY_AND_DISK (spills, never OOMs)."""
+    from pyspark import StorageLevel  # noqa: PLC0415
 
-    ``build`` is a zero-arg callable returning the DataFrame to persist;
-    correctness never depends on the cache (a cold call rebuilds)."""
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.normpath(sf_dir), tag)
-    df = _DF_CACHE.get(key)
-    if df is None:
-        for stale in [k for k in _DF_CACHE if k[0] != app]:
-            old = _DF_CACHE.pop(stale)
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — dead session; nothing to free
-                pass
-        from pyspark import StorageLevel  # noqa: PLC0415
-
-        df = build().persist(StorageLevel.MEMORY_AND_DISK)
-        _DF_CACHE[key] = df
-    return df
+    return session_memo(
+        spark, sf_dir, tag,
+        lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
-def evict_session_frames() -> None:
-    """Unpersist and drop every session-scoped cached frame. Long
-    multi-corpus drivers (the sf1 sweep runs 17 queries against two
-    corpora in one session) call this between corpora so storage for the
-    finished corpus never competes with the next one's execution
-    memory."""
-    while _DF_CACHE:
-        _, df = _DF_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
+def evict_session_frames(tag: str | None = None) -> int:
+    """Drop (and unpersist, blocking) every session memo — or only those
+    under ``tag`` — and return how many were dropped. Multi-corpus sweeps
+    (the sf1 sweep runs against two corpora in one session) evict between
+    corpora so the finished corpus's storage never competes with the next
+    one's execution memory; cold-build timings evict one tag per rep."""
+    keys = [k for k in _MEMO if tag is None or k[2] == tag]
+    for k in keys:
+        _release(_MEMO.pop(k), blocking=True)
+    return len(keys)

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_util import build_once, cache_dir
 from ..catalog import _table_name, read_bucketed, write_bucketed
 from .corpus_sql import with_corpus
 
@@ -28,13 +29,6 @@ from .corpus_sql import with_corpus
 def _orders_view(spark: SparkSession, sf_dir: str) -> None:
     spark.read.parquet(os.path.join(sf_dir, "orders.parquet")) \
         .createOrReplaceTempView("orders")
-
-
-def _corpus_cache_dir(sf_dir: str) -> str:
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(
-        repo_root, ".corpus_cache", os.path.basename(os.path.normpath(sf_dir))
-    )
 
 
 def ensure_corpus(spark: SparkSession, sf_dir: str) -> str:
@@ -48,20 +42,16 @@ def ensure_corpus(spark: SparkSession, sf_dir: str) -> str:
     At cluster scale these writes are the ingest job's output, partitioned
     by tag/date.
     """
-    from ..cache_util import is_valid, stamp  # noqa: PLC0415
+    out = cache_dir("corpus", sf_dir)
 
-    out = _corpus_cache_dir(sf_dir)
-    if is_valid(out, "queries", "operators", "fragments"):
-        return out
-    for name, df in (
-        ("queries", _derive_queries(spark, sf_dir)),
-        ("operators", _derive_operators(spark, sf_dir)),
-        ("fragments", _derive_fragments(spark, sf_dir)),
-    ):
-        write_bucketed(df, os.path.join(out, name),
-                       _table_name("corpus", sf_dir, name))
-    stamp(out)
-    return out
+    def build() -> None:
+        for name, derive in (("queries", _derive_queries),
+                             ("operators", _derive_operators),
+                             ("fragments", _derive_fragments)):
+            write_bucketed(derive(spark, sf_dir), os.path.join(out, name),
+                           _table_name("corpus", sf_dir, name))
+
+    return build_once(out, build, "queries", "operators", "fragments")
 
 
 def _derive_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,7 +140,7 @@ def corpus_version(sf_dir: str) -> str:
     whenever the corpus is (re)materialized, so derived in-process memos
     (e.g. concurrency's sizing count) can key on it instead of going
     stale across an in-process rebuild."""
-    mark = os.path.join(_corpus_cache_dir(sf_dir), "queries", "_SUCCESS")
+    mark = cache_dir("corpus", sf_dir, "queries", "_SUCCESS")
     try:
         return f"{sf_dir}:{os.stat(mark).st_mtime_ns}"
     except OSError:

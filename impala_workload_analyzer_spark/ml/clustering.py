@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_util import build_once, cache_dir, session_memo
 from ..corpus.corpus_sql import with_corpus
 from ..sources.profiles import materialized_table
 from ..sql_introspect.parser import extract_sql_features
@@ -118,16 +119,9 @@ def _ensure_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern): m2's elbow sweep and m3's final fit both consume it, so the
     SQL parse of ~15k statements runs once instead of per ML query. m0
     itself always runs the live pipeline — it is the oracle-checked op."""
-    import os  # noqa: PLC0415
-
-    from ..cache_util import is_valid, stamp  # noqa: PLC0415
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    path = os.path.join(repo_root, ".features_cache",
-                        os.path.basename(os.path.normpath(sf_dir)), "features")
-    if not is_valid(path):
-        cluster_features(spark, sf_dir).write.mode("overwrite").parquet(path)
-        stamp(path)
+    path = cache_dir("features", sf_dir, "features")
+    build_once(path, lambda: cluster_features(spark, sf_dir)
+               .write.mode("overwrite").parquet(path))
     return spark.read.parquet(path)
 
 
@@ -181,32 +175,15 @@ def _fit_best(data, k: int, pool=None):
     )[1]
 
 
-# Elbow rows are deterministic (pinned seeds, canonical input layout), so
-# one in-process computation serves both the m2 certificate and the m2b
-# curve without doubling the 1360 fits. Keyed by (applicationId, sf_dir):
-# applicationId is stable and never reused, so a regenerated fixture dir
-# inside one process still reuses (the parquet is immutable test data),
-# but a NEW session never inherits a curve computed under a replaced one
-# — consistent with the (session, corpus) keying of the shared persisted
-# frames in dedup/similarity.
-_ELBOW_MEMO: dict[tuple[str, str], list[tuple[int, float, float]]] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os  # noqa: PLC0415
-
-    return (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-
-
-def _evict_replaced(memo: dict, app: str) -> None:
-    """Drop memo entries from sessions other than the live one — a stopped
-    session's JVM-side state is gone, and id()-style reuse bugs aside,
-    keeping them would pin memory for process lifetime."""
-    for k in [k for k in memo if k[0] != app]:
-        memo.pop(k)
-
-
 def _elbow_curve(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, float]]:
+    """Elbow rows are deterministic (pinned seeds, canonical input
+    layout), so one session-memoized sweep serves both the m2 certificate
+    and the m2b curve without doubling the 1360 fits."""
+    return session_memo(spark, sf_dir, "kmeans_elbow",
+                        lambda: _elbow_sweep(spark, sf_dir))
+
+
+def _elbow_sweep(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, float]]:
     """The elbow sweep (clustering.py:67-81): per k in 1..69, (k, WCSS,
     %variance explained); TSS via the exact variance identity. 68
     k-values x 20 seeds = 1360 single-task fits run threaded, bounded by
@@ -215,10 +192,6 @@ def _elbow_curve(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, flo
 
     from pyspark.ml.functions import vector_to_array  # noqa: PLC0415
 
-    key = _memo_key(spark, sf_dir)
-    if key in _ELBOW_MEMO:
-        return _ELBOW_MEMO[key]
-    _evict_replaced(_ELBOW_MEMO, key[0])
     data = _assembled(spark, sf_dir)
     tss = (
         data.select(
@@ -242,7 +215,6 @@ def _elbow_curve(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, flo
         for k, wcss in zip(range(2, 70), costs):
             rows.append((k, float(wcss), float((tss - wcss) / tss * 100.0)))
     data.unpersist()
-    _ELBOW_MEMO[key] = rows
     return rows
 
 
@@ -315,24 +287,17 @@ def kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The final k=10 model is deterministic (pinned seeds, canonical input
-# layout), so one best-of-_SEEDS fit serves m3's published rows AND the
-# m3b certificate without doubling the 20 fits; (session, corpus) keyed
-# like _ELBOW_MEMO.
-_MODEL_MEMO: dict[tuple[str, str], object] = {}
-
-
 def _final_model(spark: SparkSession, sf_dir: str, data):
+    """The final k=10 model is deterministic (pinned seeds, canonical input
+    layout), so one session-memoized best-of-_SEEDS fit serves m3's
+    published rows AND the m3b certificate without doubling the 20 fits."""
     from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
 
-    key = _memo_key(spark, sf_dir)
-    model = _MODEL_MEMO.get(key)
-    if model is None:
-        _evict_replaced(_MODEL_MEMO, key[0])
+    def fit():
         with ThreadPoolExecutor(max_workers=len(_SEEDS)) as pool:
-            model = _fit_best(data, 10, pool)  # reference K (clustering.py:83)
-        _MODEL_MEMO[key] = model
-    return model
+            return _fit_best(data, 10, pool)  # reference K (clustering.py:83)
+
+    return session_memo(spark, sf_dir, "kmeans_model", fit)
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

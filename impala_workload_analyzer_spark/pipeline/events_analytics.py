@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache_util import cache_dir
 from ..io import load_table
 
 _GAP_MIN = 30  # session gap
@@ -2129,10 +2130,6 @@ def compaction_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write join, one partitioned write + readback aggregation. At
     100 TB raise the target and add ``maxRecordsPerFile``; n_files then
     reports per-file-id counts instead of asserting 1."""
-    import os  # noqa: PLC0415
-
-    from ..io import _REPO_ROOT  # noqa: PLC0415
-
     ev = load_table(spark, sf_dir, "events").withColumn(
         "hr", F.expr("CAST(FLOOR(unix_micros(ts) / 3600000000) AS BIGINT)")
     )
@@ -2157,10 +2154,7 @@ def compaction_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("hr").alias("hour_lo"),
         F.max("hr").alias("hour_hi"),
     )
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "compaction",
-    )
+    out = cache_dir("export", sf_dir, "compaction")
     (
         ev.join(F.broadcast(assign.select("event_type", "hr", "file_id")),
                 ["event_type", "hr"])

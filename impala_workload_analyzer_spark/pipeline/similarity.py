@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache_util import cache_dir
 from ..io import load_table
 
 _TOP_K = 5
@@ -929,8 +930,6 @@ def ann_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, never the embedding corpus."""
     import os  # noqa: PLC0415
 
-    from ..io import _REPO_ROOT  # noqa: PLC0415
-
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     scored = _ivf_scored(emb)
     # --- offline build: the three index artifacts ---
@@ -943,10 +942,7 @@ def ann_index_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub = _pq_sub(vecs)
     cb = _pq_codebook(sub)
     codes = _pq_codes(vecs).select("vec_id", "s", "code")
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "ann_index",
-    )
+    out = cache_dir("export", sf_dir, "ann_index")
     assign.write.mode("overwrite").parquet(os.path.join(out, "lists"))
     codes.write.mode("overwrite").parquet(os.path.join(out, "codes"))
     cb.write.mode("overwrite").parquet(os.path.join(out, "codebook"))

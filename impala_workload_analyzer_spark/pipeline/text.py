@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache_util import cache_dir
 from ..corpus import IDIV
 from ..io import load_table
 
@@ -883,16 +884,9 @@ def curated_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan shards each partition by adding a bucket column to the
     repartition keys and `maxRecordsPerFile` — the knobs change, the
     shape doesn't. Output cardinality is |langs x sources|, tiny."""
-    import os  # noqa: PLC0415
-
-    from ..io import _REPO_ROOT  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents")
     kept = quality_score(spark, sf_dir).filter("keep").select("doc_id")
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = cache_dir("export", sf_dir)
     (
         docs.join(kept, "doc_id")
         .select("doc_id", "text", "n_chars", "lang", "source")
@@ -949,8 +943,6 @@ def incremental_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero I/O — THE property that makes a partitioned lake maintainable.
     Same one-file-per-partition routing as snk1."""
     import os  # noqa: PLC0415
-
-    from ..io import _REPO_ROOT  # noqa: PLC0415
     from .dedup import _INCR_SPLIT, _SPARK_H  # noqa: PLC0415
 
     docs = load_table(spark, sf_dir, "documents")
@@ -961,10 +953,7 @@ def incremental_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket", F.expr(_SPARK_H.format(x="CAST(doc_id AS STRING)")) % 100
         )
     )
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)) + "_incr",
-    )
+    out = cache_dir("export", os.path.normpath(sf_dir) + "_incr")
 
     def write(df):
         (
@@ -1819,19 +1808,12 @@ def shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned write, one read-back aggregation. At 100 TB raise
     ``_N_SHARDS`` and add ``maxRecordsPerFile``; the n_files column
     then reports the per-shard file count instead of asserting 1."""
-    import os  # noqa: PLC0415
-
-    from ..io import _REPO_ROOT  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents")
     h = F.expr(_SPARK_H.format(x="CAST(doc_id AS STRING)"))
     d = docs.select("doc_id", "text", "source").withColumn(
         "shard", (h % _N_SHARDS).cast("bigint")
     )
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "shards",
-    )
+    out = cache_dir("export", sf_dir, "shards")
     (
         # explicit numPartitions (see snk6): keep the writer parallel
         d.repartition(spark.sparkContext.defaultParallelism, "shard")
@@ -2252,19 +2234,12 @@ def jsonl_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON writer/reader are inverse by construction; the checksum is
     computed from the READ-BACK rows, so any lossy encoding would
     surface as a hash mismatch."""
-    import os  # noqa: PLC0415
-
-    from ..io import _REPO_ROOT  # noqa: PLC0415
-
     docs = load_table(spark, sf_dir, "documents")
     h = F.expr(_SPARK_H.format(x="CAST(doc_id AS STRING)"))
     d = docs.select("doc_id", "text", "source").withColumn(
         "shard", (h % _N_SHARDS).cast("bigint")
     )
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "jsonl",
-    )
+    out = cache_dir("export", sf_dir, "jsonl")
     (
         # explicit numPartitions (see snk6): keep the writer parallel
         d.repartition(spark.sparkContext.defaultParallelism, "shard")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_util import session_persisted
 from ..corpus import corpus_fragments, corpus_operators, with_corpus
 
 
@@ -69,7 +70,6 @@ def plan_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PAYLOAD_COLS = ("name", "avg_time")  # every plan analytic's payload
-_NODES_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def _colocated_nodes(spark: SparkSession, sf_dir: str,
@@ -100,25 +100,18 @@ def _colocated_nodes(spark: SparkSession, sf_dir: str,
     this is the standard shared-scan pattern for a family of analytics
     over one intermediate; correctness never depends on the cache
     (a cold call simply rebuilds)."""
-    key = (id(spark), sf_dir)
-    base = _NODES_CACHE.get(key)
-    if base is None:
-        from pyspark import StorageLevel  # noqa: PLC0415
-
+    def build() -> DataFrame:
         ops = corpus_operators(spark, sf_dir).select(
             "query_id", "id", "fragment_id", "parent_id", *_PAYLOAD_COLS
         )
         frags = corpus_fragments(spark, sf_dir).select(
             "query_id", F.col("id").alias("fragment_id"), "exchange_id"
         )
-        base = (
-            ops.join(frags, ["query_id", "fragment_id"], "left")
-            .repartition(
-                spark.sparkContext.defaultParallelism, F.hash("query_id")
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        return ops.join(frags, ["query_id", "fragment_id"], "left").repartition(
+            spark.sparkContext.defaultParallelism, F.hash("query_id")
         )
-        _NODES_CACHE[key] = base
+
+    base = session_persisted(spark, sf_dir, "pt_nodes", build)
     return base.select(
         "query_id", "id", "fragment_id", "parent_id", payload_col,
         "exchange_id",

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_util import build_once, cache_dir
 from ..corpus.corpus_sql import with_corpus
 from .thrift_compact import (
     TCounter,
@@ -328,10 +329,7 @@ def encode_profile(tree: TRuntimeProfileTree, seq: int) -> str:
 
 
 def profiles_path(sf_dir: str) -> str:
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(
-        repo_root, ".profiles_cache", os.path.basename(os.path.normpath(sf_dir))
-    )
+    return cache_dir("profiles", sf_dir)
 
 
 _OP_COLS = (
@@ -348,12 +346,11 @@ _FRAG_COLS = (
 def ensure_profiles(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per sf_dir) the corpus into tag-partitioned profile log
     files; returns the log directory."""
-    from ..cache_util import is_valid, stamp  # noqa: PLC0415
-
     path = profiles_path(sf_dir)
-    if is_valid(path):
-        return path
+    return build_once(path, lambda: _render_profiles(spark, sf_dir, path))
 
+
+def _render_profiles(spark: SparkSession, sf_dir: str, path: str) -> None:
     spark.read.parquet(os.path.join(sf_dir, "orders.parquet")) \
         .createOrReplaceTempView("orders")
     q = spark.sql(with_corpus("SELECT * FROM iwa_queries"))
@@ -387,5 +384,3 @@ def ensure_profiles(spark: SparkSession, sf_dir: str) -> str:
     joined.mapInPandas(render, schema=out_schema).write.partitionBy("tag").mode(
         "overwrite"
     ).text(path)
-    stamp(path)
-    return path

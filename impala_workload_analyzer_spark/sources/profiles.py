@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_util import build_once, cache_dir
 from ..corpus.corpus_sql import with_corpus
 from .profile_render import ensure_profiles
 from .thrift_compact import TRuntimeProfileTree
@@ -547,15 +548,29 @@ def _decoded_lines(spark: SparkSession, sf_dir: str,
     profile log lines with the given ``tag`` — the CLI ``ingest --input``
     path, i.e. the reference's ``analyze_profiles.py tag file`` loop as
     one job."""
-    if input_dir is not None:
-        return spark.read.text(input_dir).select(
-            F.split("value", " ").getItem(2).alias("blob"),
-            F.lit(tag or "default").alias("tag"),
-        )
-    path = ensure_profiles(spark, sf_dir)
-    return spark.read.text(path).select(
-        F.split("value", " ").getItem(2).alias("blob"),
-        F.col("tag").cast("string").alias("tag"),
+    if input_dir is None:
+        src, tag_col = ensure_profiles(spark, sf_dir), F.col("tag").cast("string")
+    else:
+        src, tag_col = input_dir, F.lit(tag or "default")
+    lines = spark.read.text(src).select(
+        F.split("value", " ").getItem(2).alias("blob"), tag_col.alias("tag")
+    )
+    # decode+parse is CPU-bound per profile, not byte-bound: the log dir's
+    # file count (not core count) would otherwise set task parallelism.
+    # Only pay the repartition shuffle when the source actually has too few
+    # splits — the rendered logs land as ~2x core-count uniform files, so
+    # the common case reads pre-parallel with zero extra exchange.
+    if lines.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        lines = lines.repartition(spark.sparkContext.defaultParallelism)
+    return lines
+
+
+def _decode(blob: str) -> TRuntimeProfileTree:
+    """S2: base64 + zlib + thrift compact (analyze_profiles.py:17-21), as
+    the lean projection decode — the tree fields no analyzer consumes are
+    skipped, not materialized."""
+    return TRuntimeProfileTree.deserialize(
+        zlib.decompress(base64.b64decode(blob)), lean=True
     )
 
 
@@ -595,15 +610,7 @@ def _parse_table(spark: SparkSession, sf_dir: str, which: str,
                  schema: T.StructType,
                  input_dir: str | None = None,
                  tag: str | None = None) -> DataFrame:
-    # decode+parse is CPU-bound per profile, not byte-bound: the log dir's
-    # file count (not core count) would otherwise set task parallelism.
-    # Only pay the repartition shuffle when the source actually has too few
-    # splits — the rendered logs land as ~2x core-count uniform files, so
-    # the common case reads pre-parallel with zero extra exchange.
     lines = _decoded_lines(spark, sf_dir, input_dir, tag)
-    if lines.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        lines = lines.repartition(spark.sparkContext.defaultParallelism)
-
     # mapInPandas, deliberately: a mapInArrow twin emitting RecordBatch
     # via pa.array() benched SLOWER end to end (best-of-3 5.63 s vs
     # 4.96 s on sf0.1 operators) — Spark's pandas->Arrow serializer
@@ -627,13 +634,7 @@ def _parse_rows(which: str, blobs, tags) -> list[tuple]:
     the parse core without touching the emission format."""
     rows: list[tuple] = []
     for blob, tag in zip(blobs, tags):
-        # S2: base64 + zlib + thrift compact (analyze_profiles.py:17-21);
-        # lean projection decode — skips the tree fields no analyzer
-        # consumes
-        tree = TRuntimeProfileTree.deserialize(
-            zlib.decompress(base64.b64decode(blob)), lean=True
-        )
-        query, ops, frags = parse_profile(tree, tag)
+        query, ops, frags = parse_profile(_decode(blob), tag)
         if query is None:
             continue
         if which == "operators":
@@ -822,15 +823,6 @@ def ramp_over(df: DataFrame) -> DataFrame:
     )
 
 
-def _ingest_cache_dir(sf_dir: str) -> str:
-    import os  # noqa: PLC0415
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(
-        repo_root, ".ingest_cache", os.path.basename(os.path.normpath(sf_dir))
-    )
-
-
 def materialized_table(spark: SparkSession, sf_dir: str, which: str) -> DataFrame:
     """Ingest output as a materialized parquet table (written once per
     sf_dir). Downstream consumers (SQL enrichment, clustering, cascade
@@ -838,20 +830,13 @@ def materialized_table(spark: SparkSession, sf_dir: str, which: str) -> DataFram
     the materialized Mongo collections, not re-parsed profiles. The ing1-3
     driver queries still run the real parse; this is the sink they would
     write (S8)."""
-    import os  # noqa: PLC0415
-
     from ..catalog import _table_name, read_bucketed, write_bucketed  # noqa: PLC0415
 
-    from ..cache_util import is_valid, stamp  # noqa: PLC0415
-
-    out = _ingest_cache_dir(sf_dir)
-    path = os.path.join(out, which)
+    path = cache_dir("ingest", sf_dir, which)
     table = _table_name("ingest", sf_dir, which)
-    if not is_valid(path):
-        fn = {"operators": parsed_operators, "fragments": parsed_fragments,
-              "queries": parsed_queries}[which]
-        write_bucketed(fn(spark, sf_dir), path, table)
-        stamp(path)
+    fn = {"operators": parsed_operators, "fragments": parsed_fragments,
+          "queries": parsed_queries}[which]
+    build_once(path, lambda: write_bucketed(fn(spark, sf_dir), path, table))
     return read_bucketed(spark, path, table)
 
 
@@ -889,8 +874,6 @@ def ingest_health(spark: SparkSession, sf_dir: str,
     rows per task), then one tiny groupBy(tag) — the profile stream is
     read once and never shuffled."""
     lines = _decoded_lines(spark, sf_dir, input_dir, tag)
-    if lines.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        lines = lines.repartition(spark.sparkContext.defaultParallelism)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -899,10 +882,7 @@ def ingest_health(spark: SparkSession, sf_dir: str,
                 c = counts.setdefault(tg, [0, 0, 0, 0])
                 c[0] += 1
                 try:
-                    tree = TRuntimeProfileTree.deserialize(
-                        zlib.decompress(base64.b64decode(blob)), lean=True
-                    )
-                    query, _ops, _frags = parse_profile(tree, tg)
+                    query, _ops, _frags = parse_profile(_decode(blob), tg)
                 except Exception:  # noqa: BLE001 — quarantine, don't abort
                     c[3] += 1
                     continue

@@ -485,14 +485,14 @@ class TRuntimeProfileTree:
 
     @classmethod
     def deserialize(cls, data: bytes, lean: bool = False) -> TRuntimeProfileTree:
-        """Decode a compact-protocol tree. Tries the specialized fast path
-        (ingest decodes ~150k profiles per run — generic per-field method
-        dispatch costs ~4x); any structural surprise falls back to the
-        fully general reader.
+        """Decode a compact-protocol tree. ``lean=False`` is the fully
+        general reader: every field, any field order or header form.
 
-        ``lean=True`` is a projection decode for the ingest hot path: data
-        no analytics consumer reads is skip-scanned instead of
-        materialized, leaving defaults — ``info_strings_display_order``,
+        ``lean=True`` is the ingest hot path's projection decode, through
+        the specialized fast scanner (ingest decodes ~150k profiles per
+        run — generic per-field method dispatch costs ~4x). Data no
+        analytics consumer reads is skip-scanned instead of materialized,
+        leaving defaults — ``info_strings_display_order``,
         ``child_counters_map``, counters other than
         RowsReturned/TotalTime (the only ones _op_row/_frag_row emit),
         event sequences other than "Query Timeline", and info strings on
@@ -504,14 +504,15 @@ class TRuntimeProfileTree:
         read it (RuntimeProfile.thrift:50-59 declares it; no
         profile_analyzer.py consumer), so this repo's harvest is the
         field's first landing column. The parsed output rows are
-        identical to a full decode's (pinned by tests/test_ingest.py)."""
-        try:
-            return _fast_deserialize(data, lean)
-        except _FastMiss:
-            return cls._deserialize_generic(data)
-
-    @classmethod
-    def _deserialize_generic(cls, data: bytes) -> TRuntimeProfileTree:
+        identical to a full decode's (pinned by tests/test_ingest.py). Any
+        structural surprise on the fast path falls back to the general
+        reader, which returns the full tree — a superset of the
+        projection."""
+        if lean:
+            try:
+                return _fast_deserialize(data)
+            except _FastMiss:
+                pass
         r = _Reader(data)
         out = cls([])
         r.struct_begin()
@@ -539,18 +540,18 @@ _INTERN_CAP = 1 << 14  # distinct node/counter/key names are few; cap anyway
 
 # The only counter names / event sequence the analyzer's output rows ever
 # consume (profiles._op_row, _frag_row, parse_profile's timeline scan).
-# Everything else is byte-skipped in lean mode.
+# Everything else is byte-skipped by the fast scanner.
 _LEAN_COUNTERS = frozenset((b"RowsReturned", b"TotalTime"))
 _LEAN_EVENT_SEQ = "Query Timeline"
 
 
-def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
-    """Specialized decoder: one closure-based scanner, varints and field
-    headers inlined, fields expected in declared order with short-form
-    headers. Produces objects identical to the generic reader (pinned by
-    tests); raises _FastMiss on anything unexpected. ``lean`` skip-scans
-    fields 7/8 plus unconsumed counters / event sequences / non-Summary
-    info strings (see ``deserialize``) without materializing.
+def _fast_deserialize(data: bytes) -> TRuntimeProfileTree:
+    """Specialized projection decoder: one closure-based scanner, varints
+    and field headers inlined, fields expected in declared order with
+    short-form headers. Skip-scans fields 7/8 plus unconsumed counters /
+    event sequences / non-Summary info strings (see ``deserialize``)
+    without materializing; every kept field equals the generic reader's
+    (pinned by tests). Raises _FastMiss on anything unexpected.
 
     Node structs are decoded straight-line — our writer (and Impala's)
     emits fields 1-8 unconditionally in declared order, so the per-field
@@ -618,8 +619,8 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
     def counter() -> TCounter | None:
         # fully inlined: counters are the highest-count struct (~60 per
         # profile x ~150k profiles per ingest), so even the closure-call
-        # overhead of rs/rz is worth removing. In lean mode only the two
-        # names the analyzer ever emits (RowsReturned / TotalTime — see
+        # overhead of rs/rz is worth removing. Only the two names the
+        # analyzer ever emits (RowsReturned / TotalTime — see
         # profiles._op_row/_frag_row) are materialized; the rest are
         # byte-skipped and returned as None.
         nonlocal pos
@@ -631,15 +632,15 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
         p += 1
         if ln & 0x80:
             raise _FastMiss
-        # defer the name slice in lean mode: kept names are 12/9 bytes
+        # defer the name slice: kept names are 12/9 bytes
         # (RowsReturned/TotalTime), so any other length skips without
         # allocating the bytes object at all
-        if lean and ln != 12 and ln != 9:
+        if ln != 12 and ln != 9:
             raw = None
         else:
             raw = data[p : p + ln]
         p += ln
-        if lean and (raw is None or raw not in _LEAN_COUNTERS):
+        if raw is None or raw not in _LEAN_COUNTERS:
             if data[p] != 0x15:  # field 2 header
                 raise _FastMiss
             p += 1
@@ -686,7 +687,7 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
         pos = p + 1
         return TCounter(name, ctype, value)
 
-    def node(keep_info: bool = True) -> TRuntimeProfileNode:
+    def node(keep_info: bool) -> TRuntimeProfileNode:
         nonlocal pos
         out = TRuntimeProfileNode("")
         p = pos
@@ -743,15 +744,12 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
                 shift += 7
         if size:
             pos = p
-            if lean:
-                kept = []
-                for _ in range(size):
-                    c = counter()
-                    if c is not None:
-                        kept.append(c)
-                out.counters = kept
-            else:
-                out.counters = [counter() for _ in range(size)]
+            kept = []
+            for _ in range(size):
+                c = counter()
+                if c is not None:
+                    kept.append(c)
+            out.counters = kept
             p = pos
         # field 4: i64 metadata, delta 1
         if data[p] != 0x16:
@@ -798,7 +796,7 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
         if n:
             if data[p] != (CT_BINARY << 4) | CT_BINARY:
                 raise _FastMiss
-            if lean and not keep_info:
+            if not keep_info:
                 # only the Summary node's info strings are ever read
                 # (profiles.parse_profile: tree.nodes[1].info_strings);
                 # instance-node info is harvested but never emitted.
@@ -842,26 +840,21 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
                 if not b & 0x80:
                     break
                 shift += 7
-        if lean:
-            for _ in range(size):  # closure-free string skip
-                ln = data[q]
-                q += 1
-                if ln & 0x80:
-                    ln &= 0x7F
-                    shift = 7
-                    while True:
-                        b = data[q]
-                        q += 1
-                        ln |= (b & 0x7F) << shift
-                        if not b & 0x80:
-                            break
-                        shift += 7
-                q += ln
-            p = q
-        else:
-            pos = q
-            out.info_strings_display_order = [rs() for _ in range(size)]
-            p = pos
+        for _ in range(size):  # closure-free string skip
+            ln = data[q]
+            q += 1
+            if ln & 0x80:
+                ln &= 0x7F
+                shift = 7
+                while True:
+                    b = data[q]
+                    q += 1
+                    ln |= (b & 0x7F) << shift
+                    if not b & 0x80:
+                        break
+                    shift += 7
+            q += ln
+        p = q
         # field 8: map<string,set<string>> child counters, delta 1
         if data[p] != 0x1B:
             raise _FastMiss
@@ -881,51 +874,42 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
         if n:
             if data[p] != (CT_BINARY << 4) | CT_SET:
                 raise _FastMiss
-            if lean:
-                q = p + 1
-                for _ in range(n):  # key string, then set<string>
-                    remaining = 1
-                    first = True
-                    while remaining:
-                        ln = data[q]
+            q = p + 1
+            for _ in range(n):  # key string, then set<string>
+                remaining = 1
+                first = True
+                while remaining:
+                    ln = data[q]
+                    q += 1
+                    if ln & 0x80:
+                        ln &= 0x7F
+                        shift = 7
+                        while True:
+                            b = data[q]
+                            q += 1
+                            ln |= (b & 0x7F) << shift
+                            if not b & 0x80:
+                                break
+                            shift += 7
+                    q += ln
+                    remaining -= 1
+                    if first:  # after the key: read the set header
+                        first = False
+                        h = data[q]
                         q += 1
-                        if ln & 0x80:
-                            ln &= 0x7F
-                            shift = 7
+                        if h & 0x0F != CT_BINARY:
+                            raise _FastMiss
+                        remaining = h >> 4
+                        if remaining == 0xF:
+                            remaining = shift = 0
                             while True:
                                 b = data[q]
                                 q += 1
-                                ln |= (b & 0x7F) << shift
+                                remaining |= (b & 0x7F) << shift
                                 if not b & 0x80:
                                     break
                                 shift += 7
-                        q += ln
-                        remaining -= 1
-                        if first:  # after the key: read the set header
-                            first = False
-                            h = data[q]
-                            q += 1
-                            if h & 0x0F != CT_BINARY:
-                                raise _FastMiss
-                            remaining = h >> 4
-                            if remaining == 0xF:
-                                remaining = shift = 0
-                                while True:
-                                    b = data[q]
-                                    q += 1
-                                    remaining |= (b & 0x7F) << shift
-                                    if not b & 0x80:
-                                        break
-                                    shift += 7
-                p = q
-            else:
-                pos = p + 1
-                ccm = {}
-                for _ in range(n):
-                    k = ri()
-                    ccm[k] = [ri() for _ in range(coll(CT_BINARY))]
-                out.child_counters_map = ccm
-                p = pos
+            p = q
         # --- optional tail: fields 9/10 then STOP ---
         pos = p
         last = 8
@@ -945,7 +929,7 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
                         raise _FastMiss
                     pos += 1
                     name = ri()
-                    if lean and name != _LEAN_EVENT_SEQ:
+                    if name != _LEAN_EVENT_SEQ:
                         # only "Query Timeline" is read (parse_profile's
                         # timeline scan); skip the rest without decoding
                         if data[pos] != 0x19:
@@ -976,7 +960,7 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
                     seqs.append(TEventSequence(name, tstamps, labels))
                 out.event_sequences = seqs
             elif last == 10 and ftype == CT_LIST:
-                # materialized even in lean mode since the time-series
+                # materialized (not skipped) since the time-series
                 # harvest (profiles.parsed_time_series) consumes field 10;
                 # the payload is tiny (one short counter per instance node)
                 tscs = []
@@ -1010,8 +994,8 @@ def _fast_deserialize(data: bytes, lean: bool = False) -> TRuntimeProfileTree:
         if data[pos] != (1 << 4) | CT_LIST:  # tree field 1: list<struct>
             raise _FastMiss
         pos += 1
-        # in lean mode only the Summary node (index 1) keeps info strings
-        nodes = [node(not lean or i == 1) for i in range(coll(CT_STRUCT))]
+        # only the Summary node (index 1) keeps info strings
+        nodes = [node(i == 1) for i in range(coll(CT_STRUCT))]
         if data[pos] != CT_STOP:
             raise _FastMiss
         return TRuntimeProfileTree(nodes)

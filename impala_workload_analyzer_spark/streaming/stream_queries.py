@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache_util import cache_dir
+
 _GAP = "30 minutes"
 
 
@@ -1464,7 +1466,7 @@ def streaming_exactly_once_export(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
-    base = _snk7_base(sf_dir)
+    base = cache_dir("export", sf_dir)
     out = _snk7_out(sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(base, exist_ok=True)
@@ -1483,21 +1485,8 @@ def streaming_exactly_once_export(spark: SparkSession, sf_dir: str) -> DataFrame
     return _snk7_readback(spark, out)
 
 
-def _snk7_base(sf_dir: str) -> str:
-    import os  # noqa: PLC0415
-
-    from ..io import _REPO_ROOT  # noqa: PLC0415
-
-    return os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def _snk7_out(sf_dir: str) -> str:
-    import os  # noqa: PLC0415
-
-    return os.path.join(_snk7_base(sf_dir), "stream_batches")
+    return cache_dir("export", sf_dir, "stream_batches")
 
 
 def _snk7_write_batch(out: str):

@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import glob
+import os
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
+from impala_workload_analyzer_spark.cache_util import cache_dir, fingerprint
 from impala_workload_analyzer_spark.corpus import (
     corpus_fragments,
     corpus_operators,
@@ -61,3 +66,33 @@ def test_consistency_check_finds_planted_violations(spark, sf_dir):
         r = bykey[(v["query_id"], v["id"])]
         inst = r["counters"][v["counter_name"]]
         assert int(sum(inst) // len(inst)) != int(r["avg_counters"][v["counter_name"]])
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_cache_dir_keeps_every_derived_data_path():
+    """One path rule for every disk cache kind, byte-identical to the
+    layout the committed caches (and the export readers) already use."""
+    for kind, parts, want in (
+        ("corpus", (), ".corpus_cache/sf0.01"),
+        ("profiles", (), ".profiles_cache/sf0.01"),
+        ("ingest", ("fragments",), ".ingest_cache/sf0.01/fragments"),
+        ("features", ("features",), ".features_cache/sf0.01/features"),
+        ("export", ("ann_index",), ".export_cache/sf0.01/ann_index"),
+    ):
+        for sf_dir in ("data/sf0.01", "data/sf0.01/", "sf0.01"):
+            assert cache_dir(kind, sf_dir, *parts) == os.path.join(_REPO, want)
+
+
+def test_committed_cache_stamps_match_source_fingerprint():
+    """The committed caches (sf0.001, sf0.01) must carry the current source
+    fingerprint: a stale stamp is silently rebuilt on first touch in every
+    checkout, so a change to a fingerprinted source must regenerate the
+    committed caches with it."""
+    stamps = glob.glob(os.path.join(_REPO, ".*_cache", "sf0.0*1", "**", "_FINGERPRINT"),
+                       recursive=True)
+    assert stamps
+    want = fingerprint()
+    stale = [p for p in stamps if Path(p).read_text().strip() != want]
+    assert not stale, stale

@@ -363,8 +363,14 @@ _names = st.text(
     min_size=0, max_size=200,
 )
 _i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+# the names the lean decode keeps, mixed with arbitrary (incl. >127-byte)
+# ones, so both the keep and the skip branches of the fast scanner run
+_KEPT_COUNTERS = ("RowsReturned", "TotalTime")
+_TIMELINE = "Query Timeline"
 _counters = st.lists(
-    st.builds(TC.TCounter, _names, st.integers(0, 6), _i64), max_size=5
+    st.builds(TC.TCounter, st.one_of(st.sampled_from(_KEPT_COUNTERS), _names),
+              st.integers(0, 6), _i64),
+    max_size=5,
 )
 _nodes = st.builds(
     TC.TRuntimeProfileNode,
@@ -381,7 +387,7 @@ _nodes = st.builds(
     event_sequences=st.one_of(
         st.none(),
         st.lists(
-            st.builds(TC.TEventSequence, _names,
+            st.builds(TC.TEventSequence, st.one_of(st.just(_TIMELINE), _names),
                       st.lists(_i64, max_size=4), st.lists(_names, max_size=4)),
             max_size=2,
         ),
@@ -397,17 +403,34 @@ _nodes = st.builds(
 )
 
 
+def _project(tree):
+    """The lean decode contract: per node, the scalar fields, only the
+    RowsReturned/TotalTime counters, info strings only on node 1 (the
+    Summary), only the "Query Timeline" sequence, and field 10."""
+    return [
+        (n.name, n.num_children, n.metadata, n.indent,
+         [c for c in n.counters if c.name in _KEPT_COUNTERS],
+         n.info_strings if i == 1 else {},
+         None if n.event_sequences is None
+         else [e for e in n.event_sequences if e.name == _TIMELINE],
+         n.time_series_counters)
+        for i, n in enumerate(tree.nodes)
+    ]
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.lists(_nodes, max_size=4))
 def test_wire_roundtrip_property(nodes):
-    """Any tree our writer can emit decodes back identically through BOTH
-    the straight-line fast path and the generic reader — including >127
-    byte names (multi-byte varint lengths, which bounce the fast path to
-    the generic one), unicode, negative metadata, and huge i64 values."""
+    """Any tree our writer can emit decodes back identically through the
+    general reader, and through the lean path ingest runs to the same
+    projection — including >127 byte names (multi-byte varint lengths,
+    which bounce the fast scanner to the general reader), unicode,
+    negative metadata, and huge i64 values."""
     tree = TC.TRuntimeProfileTree(nodes)
     blob = tree.serialize()
     assert TC.TRuntimeProfileTree.deserialize(blob) == tree
-    assert TC.TRuntimeProfileTree._deserialize_generic(blob) == tree
+    assert _project(TC.TRuntimeProfileTree.deserialize(blob, lean=True)) \
+        == _project(tree)
 
 
 def test_scan_cache_concurrent_builders(tmp_path):

@@ -119,11 +119,13 @@ def test_kmeans_final_deterministic_and_certified(spark, sf_dir):
     the m3b certificate over the same fit is all-TRUE (what the DuckDB
     oracle asserts): sizes sum to n, every member nearer its own centroid
     than any other, centroid == assigned-mean (Lloyd fixed point)."""
+    from impala_workload_analyzer_spark.cache_util import evict_session_frames
     from impala_workload_analyzer_spark.io import load_table
     from impala_workload_analyzer_spark.ml import clustering as C
 
     a = sorted(map(tuple, C.kmeans_clusters(spark, sf_dir).collect()))
-    C._MODEL_MEMO.clear()  # force a second, independent best-of-seeds fit
+    # force a second, independent best-of-seeds fit
+    assert evict_session_frames("kmeans_model") >= 1
     b = sorted(map(tuple, C.kmeans_clusters(spark, sf_dir).collect()))
     assert a == b
     assert len(a) == 10
@@ -1780,11 +1782,10 @@ def test_curated_export_roundtrip_layout(spark, sf_dir):
     """snk1: the export writes one file per (lang, source) partition,
     the read-back rows equal the kept set exactly (ids and text), and
     files are doc_id-sorted within partitions."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from impala_workload_analyzer_spark.io import _REPO_ROOT, load_table
+    from impala_workload_analyzer_spark.cache_util import cache_dir
+    from impala_workload_analyzer_spark.io import load_table
     from impala_workload_analyzer_spark.pipeline.text import (
         curated_export,
         quality_score,
@@ -1792,10 +1793,7 @@ def test_curated_export_roundtrip_layout(spark, sf_dir):
 
     manifest = curated_export(spark, sf_dir).collect()
     assert manifest and all(r["n_files"] == 1 for r in manifest)
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    out = cache_dir("export", sf_dir)
     back = spark.read.parquet(out)
     kept_ids = {
         r["doc_id"]
@@ -2373,7 +2371,7 @@ def test_ann_index_export_roundtrip_serves_sim13(spark, sf_dir):
     disk with the expected schemas."""
     import os
 
-    from impala_workload_analyzer_spark.io import _REPO_ROOT
+    from impala_workload_analyzer_spark.cache_util import cache_dir
 
     served = sorted(
         (r["query_id"], r["neighbor_id"], r["rank"], r["adc_dist"])
@@ -2384,10 +2382,7 @@ def test_ann_index_export_roundtrip_serves_sim13(spark, sf_dir):
         for r in similarity.ivfpq_topk(spark, sf_dir).collect()
     )
     assert served == live
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "ann_index",
-    )
+    out = cache_dir("export", sf_dir, "ann_index")
     assert set(spark.read.parquet(os.path.join(out, "lists")).columns) == {
         "vec_id", "list_id"
     }
@@ -2694,7 +2689,7 @@ def test_shard_export_roundtrip_matches_plan_manifest(spark, sf_dir):
     exist on disk under shard= partition dirs."""
     import os
 
-    from impala_workload_analyzer_spark.io import _REPO_ROOT
+    from impala_workload_analyzer_spark.cache_util import cache_dir
     from impala_workload_analyzer_spark.pipeline.text import (
         shard_export,
         shard_manifest,
@@ -2707,10 +2702,7 @@ def test_shard_export_roundtrip_matches_plan_manifest(spark, sf_dir):
         assert b["n_files"] == 1
         assert b["n_docs"] == plan[shard]["n_docs"]
         assert b["checksum"] == plan[shard]["checksum"]
-    out = os.path.join(
-        _REPO_ROOT, ".export_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "shards",
-    )
+    out = cache_dir("export", sf_dir, "shards")
     dirs = {d for d in os.listdir(out) if d.startswith("shard=")}
     assert len(dirs) == len(back)
 

@@ -56,6 +56,22 @@ def test_pt2_conserves_every_operator(spark, sf_dir):
     assert pt2.count() == corpus_operators(spark, sf_dir).count()
 
 
+def test_plan_node_frame_is_evicted_with_the_session_frames(spark, sf_dir):
+    # the shared pt2/pt3/pt5 node frame is session state like every other
+    # persisted intermediate: evicting the session frames must unpersist it
+    from impala_workload_analyzer_spark.cache_util import evict_session_frames
+    from impala_workload_analyzer_spark.plans.draw_plan import _colocated_nodes
+
+    def cached(df) -> bool:  # a fresh Dataset re-resolves the cache lookup
+        plan = df.select("*")._jdf.queryExecution().withCachedData()  # noqa: SLF001
+        return "InMemoryRelation" in plan.toString()
+
+    nodes = _colocated_nodes(spark, sf_dir, "name")
+    assert cached(nodes)
+    evict_session_frames()
+    assert not cached(nodes)
+
+
 def test_q2_correlated_min_is_all_broadcast(spark, sf_dir):
     # every dim (part slice, EU suppliers, per-part min) is broadcast;
     # the only non-broadcast work is the partsupp distinct

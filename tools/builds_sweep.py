@@ -45,20 +45,9 @@ def _builds():
     return bench._one_time_builds()
 
 
-def _evict_tag(tag: str) -> None:
-    from impala_workload_analyzer_spark import cache_util  # noqa: PLC0415
-
-    for key in [k for k in cache_util._DF_CACHE if k[2] == tag]:
-        df = cache_util._DF_CACHE.pop(key)
-        try:
-            df.unpersist(blocking=True)
-        except Exception:  # noqa: BLE001 — best-effort, frame may be gone
-            pass
-
-
-# build-name -> session_persisted tag (the _DF_CACHE key the frame
-# lives under); asserted against the live cache after each build so a
-# renamed tag fails the sweep instead of silently timing warm rebuilds
+# build-name -> session_persisted tag the frame lives under; the second
+# rep's eviction must find the first rep's frame, so a renamed tag fails
+# the sweep instead of silently timing warm rebuilds
 _TAGS = {
     "_shared_shingles": "shingles",
     "_shared_jaccard3": "jaccard3",
@@ -84,7 +73,6 @@ def main() -> int:
     only = set(sys.argv[1:])
     ensure_sf1()
 
-    from impala_workload_analyzer_spark import cache_util
     from impala_workload_analyzer_spark.cache_util import evict_session_frames
     from impala_workload_analyzer_spark.io import scan_cache_dir
     from impala_workload_analyzer_spark.session import get_spark
@@ -104,17 +92,16 @@ def main() -> int:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 continue  # unselected builds still run: downstream needs them warm
             best = None
-            for _ in range(2):
-                _evict_tag(_TAGS[bname])
+            for rep in range(2):
+                evicted = evict_session_frames(_TAGS[bname])
+                assert rep == 0 or evicted, (
+                    f"{bname}: no session frame under tag {_TAGS[bname]!r}"
+                    " — _TAGS is stale"
+                )
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
-            tags_live = {k[2] for k in cache_util._DF_CACHE}
-            assert _TAGS[bname] in tags_live, (
-                f"{bname}: expected frame tag {_TAGS[bname]!r} in the "
-                f"session cache, found {sorted(tags_live)} — _TAGS is stale"
-            )
             out.setdefault(bname, {})[tag] = round(best, 4)
             print(f"# {tag} {bname} best={best:.3f}s", file=sys.stderr, flush=True)
 
