@@ -1,4 +1,4 @@
-from .builder import corpus_fragments, corpus_operators, corpus_queries, corpus_version
+from .builder import corpus_fragments, corpus_operators, corpus_queries
 from .corpus_sql import CORPUS_CTES, IDIV, with_corpus
 
 __all__ = [
@@ -6,7 +6,6 @@ __all__ = [
     "IDIV",
     "with_corpus",
     "corpus_queries",
-    "corpus_version",
     "corpus_operators",
     "corpus_fragments",
 ]

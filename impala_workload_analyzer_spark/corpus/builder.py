@@ -135,18 +135,6 @@ def _derive_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def corpus_version(sf_dir: str) -> str:
-    """Identity of the currently-built corpus for ``sf_dir`` — changes
-    whenever the corpus is (re)materialized, so derived in-process memos
-    (e.g. concurrency's sizing count) can key on it instead of going
-    stale across an in-process rebuild."""
-    mark = cache_dir("corpus", sf_dir, "queries", "_SUCCESS")
-    try:
-        return f"{sf_dir}:{os.stat(mark).st_mtime_ns}"
-    except OSError:
-        return f"{sf_dir}:unbuilt"
-
-
 def corpus_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized ``queries`` table (bucketed on query_id)."""
     out = ensure_corpus(spark, sf_dir)

@@ -52,8 +52,6 @@ _SCAN_CACHED = frozenset(TABLES) - {"region", "nation"}
 # long past any reader that resolved the old version pre-rebuild
 _PRUNE_GRACE_S = 3600
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # ~1 MiB of source parquet per cache file (measured sweet spot at sf0.1);
@@ -209,15 +207,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op for the current TIMESTAMP(MICROS) files."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_event_ts(_scan_cached(spark, sf_dir, "events"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table as a lazy DataFrame keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each fixture table as a temp view (mirrors the DuckDB oracle
-    setup, which pre-registers the same names)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

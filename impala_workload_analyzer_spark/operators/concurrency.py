@@ -40,12 +40,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..corpus import corpus_queries, corpus_version, with_corpus
+from ..cache_util import session_memo
+from ..corpus import corpus_queries, with_corpus
 
 _EVENTS_PER_CHUNK = 1_000_000  # two-phase scan only above this per-sweep size
 # one running-sum task handles ~1M (ts, delta) tuples (~16 MB) comfortably;
 # below that the two-phase scan's 7 extra shuffles cost more than they save
-_COUNT_CACHE: dict[str, int] = {}  # sizing statistic, keyed by corpus_version
+
+
+def _target_chunks(spark: SparkSession, sf_dir: str, tag: str,
+                   frame: DataFrame) -> int:
+    """Adaptive chunking: ~1 chunk per _EVENTS_PER_CHUNK sweep events (two
+    per ``frame`` row), so small inputs take the single-window plan and
+    only genuinely task-overflowing streams pay the two-phase scan; capped
+    so tiny chunks never outnumber cores. The count is one cheap job,
+    memoized per (session, corpus) under ``tag`` — a table statistic that
+    only sizes chunks, never part of a result."""
+    n_events = session_memo(spark, sf_dir, tag, frame.count) * 2
+    return min(n_events // _EVENTS_PER_CHUNK,
+               spark.sparkContext.defaultParallelism * 4)
 
 
 def _two_phase_sweep(events: DataFrame, target_chunks: int,
@@ -148,18 +161,7 @@ def _swept_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("cluster", "e.ts", "e.delta")
-    # Adaptive chunking: ~1 chunk per _EVENTS_PER_CHUNK events so small
-    # inputs take the single-window plan and only genuinely task-overflowing
-    # streams pay the two-phase scan; capped so tiny chunks never outnumber
-    # cores. The sizing count is one cheap job over the bucketed corpus,
-    # memoized per sf_dir — it is a table statistic, not part of the query.
-    ver = corpus_version(sf_dir)
-    if ver not in _COUNT_CACHE:
-        _COUNT_CACHE[ver] = scoped.count()
-    n_events = _COUNT_CACHE[ver] * 2
-    target_chunks = min(
-        n_events // _EVENTS_PER_CHUNK, spark.sparkContext.defaultParallelism * 4
-    )
+    target_chunks = _target_chunks(spark, sf_dir, "conc_tpch_queries", scoped)
     return _two_phase_sweep(events, target_chunks).filter(
         F.col("interval").isNotNull()
     )
@@ -603,14 +605,7 @@ def memory_demand_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("cluster", "e.ts", "e.delta")
-    ver = corpus_version(sf_dir)
-    key = f"w10:{ver}"
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = weighted.count()
-    n_events = _COUNT_CACHE[key] * 2
-    target_chunks = min(
-        n_events // _EVENTS_PER_CHUNK, spark.sparkContext.defaultParallelism * 4
-    )
+    target_chunks = _target_chunks(spark, sf_dir, "conc_w10_weighted", weighted)
     swept = _two_phase_sweep(events, target_chunks).filter(
         F.col("interval").isNotNull()
     )
@@ -1000,13 +995,7 @@ def start_level_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e"),
     ).select("cluster", "e.ts", "e.delta", "e.query_id", "e.dur_us")
-    ver = corpus_version(sf_dir)
-    if ver not in _COUNT_CACHE:
-        _COUNT_CACHE[ver] = scoped.count()
-    n_events = _COUNT_CACHE[ver] * 2
-    target_chunks = min(
-        n_events // _EVENTS_PER_CHUNK, spark.sparkContext.defaultParallelism * 4
-    )
+    target_chunks = _target_chunks(spark, sf_dir, "conc_tpch_queries", scoped)
     swept = _two_phase_sweep(
         events, target_chunks,
         extra_order=("query_id",), payload=("delta", "query_id", "dur_us"),

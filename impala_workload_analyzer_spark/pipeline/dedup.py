@@ -400,13 +400,13 @@ def _shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CC_MAX_ITERS = 25
 
 
-def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dd8 — connected components over the MinHash-LSH near-dup graph: the
-    dedup endgame, turning pairwise matches into canonical groups (keep
-    one doc per component). Label propagation: every doc starts labeled
-    with its own id; each round every node takes the min of its own and
-    its neighbors' labels; converges to min-id-per-component in
-    O(diameter) rounds.
+def label_components(nodes: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """Connected components of the undirected graph ``pairs`` (two node-id
+    columns) over ``nodes`` (column ``id_col``), as ``(id_col, label)``
+    with label = the component's min id — the fixpoint dd8 and dd9 share.
+    Label propagation: every node starts labeled with its own id; each
+    round every node takes the min of its own and its neighbors' labels;
+    converges to min-id-per-component in O(diameter) rounds.
 
     This is the iterative-algorithm pattern done Spark-native: each round
     is one join + one aggregate over the whole graph (no per-node driver
@@ -414,8 +414,49 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only driver-side scalar is the per-round convergence count —
     exactly how large-scale CC (e.g. GraphFrames) is structured. Near-dup
     graphs are unions of small cliques, so the diameter — and the round
-    count — stays tiny even at 100 TB. The DuckDB oracle computes the
-    same fixpoint as a WITH RECURSIVE reachability closure.
+    count — stays tiny even at 100 TB."""
+    a, b = pairs.columns
+    edges = pairs.unionByName(
+        pairs.select(F.col(b).alias(a), F.col(a).alias(b))
+    ).select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    edges = edges.localCheckpoint(eager=True)  # pairs derivation runs once
+    labels = (
+        nodes.select(id_col)
+        .withColumn("label", F.col(id_col))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(_CC_MAX_ITERS):
+        neigh = labels.join(edges, labels[id_col] == edges["src"]).select(
+            F.col("dst").alias(id_col), "label"
+        )
+        new_labels = (
+            labels.select(id_col, "label")
+            .unionByName(neigh)
+            .groupBy(id_col)
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.join(labels.withColumnRenamed("label", "old"), id_col)
+            .filter(F.col("label") != F.col("old"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
+    # a diameter > _CC_MAX_ITERS chain would exit with wrong labels;
+    # fail loudly rather than return silently-mislabeled components
+    raise RuntimeError(
+        f"connected-components did not converge in {_CC_MAX_ITERS} rounds"
+    )
+
+
+def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dd8 — connected components over the MinHash-LSH near-dup graph: the
+    dedup endgame, turning pairwise matches into canonical groups (keep
+    one doc per component), via the shared ``label_components`` fixpoint.
+    The DuckDB oracle computes the same fixpoint as a WITH RECURSIVE
+    reachability closure.
 
     The edge list reads the session's verified pair frame
     (_shared_minhash_pairs) rather than re-running dd3's banded join +
@@ -424,44 +465,11 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every other pair consumer (dd17's tier, dd24, tx31) already
     reads the same frame — production materializes the verified pairs
     once per corpus snapshot and the component pass joins them."""
-    pairs = _shared_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = edges.localCheckpoint(eager=True)  # pairs derivation runs once
-    labels = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+    labels = label_components(
+        load_table(spark, sf_dir, "documents"),
+        _shared_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"),
+        "doc_id",
     )
-    for _ in range(_CC_MAX_ITERS):
-        neigh = labels.join(edges, labels["doc_id"] == edges["src"]).select(
-            F.col("dst").alias("doc_id"), "label"
-        )
-        new_labels = (
-            labels.select("doc_id", "label")
-            .unionByName(neigh)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("label", "old"), "doc_id"
-            )
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # a diameter > _CC_MAX_ITERS chain would exit with wrong labels;
-        # fail loudly rather than return silently-mislabeled components
-        raise RuntimeError(
-            f"connected-components did not converge in {_CC_MAX_ITERS} rounds"
-        )
     return labels.select("doc_id", F.col("label").alias("component_id"))
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache_util import cache_dir
+from ..cache_util import cache_dir, session_memo
 from ..io import load_table
 
 _GAP_MIN = 30  # session gap
@@ -543,7 +543,6 @@ def hll_distinct_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DELAYS_PER_CHUNK = 1_000_000  # one rank task handles ~1M (delay, user) rows
-_EV18_COUNT_CACHE: dict[str, int] = {}  # sizing statistic, keyed by sf_dir
 
 
 def _funnel_delays(ev: DataFrame) -> DataFrame:
@@ -672,12 +671,10 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase chunked construction w1 uses (``_ranked_delays``,
     plan-pinned by ``test_funnel_latency_two_phase``). The sizing count
     is the events row count — an upper bound on per-pair delays — one
-    cheap metadata-only job, memoized per sf_dir."""
+    cheap metadata-only job, memoized per (session, corpus)."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    if sf_dir not in _EV18_COUNT_CACHE:
-        _EV18_COUNT_CACHE[sf_dir] = ev.count()
     target_chunks = min(
-        _EV18_COUNT_CACHE[sf_dir] // _DELAYS_PER_CHUNK,
+        session_memo(spark, sf_dir, "ev18_n_events", ev.count) // _DELAYS_PER_CHUNK,
         spark.sparkContext.defaultParallelism * 4,
     )
     return _quantile_rollup(_ranked_delays(_funnel_delays(ev), target_chunks))
@@ -1927,7 +1924,15 @@ def session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial-agg'd reduction to a single row, exploded to the
     |thresholds|-row curve — the threshold ladder never multiplies the
     session-scan cost."""
-    sess = sessionize(spark, sf_dir).select(
+    return session_survival_over(sessionize(spark, sf_dir))
+
+
+def session_survival_over(sess: DataFrame) -> DataFrame:
+    """ev27's ladder over any session frame carrying ``session_start_us``,
+    ``session_end_us`` (last event time) and ``n_events`` — split out (the
+    depth_survival_over pattern) so the streaming twin st16 runs the SAME
+    rollup over st2's watermark-finalized sessions."""
+    sess = sess.select(
         (F.col("session_end_us") - F.col("session_start_us")).alias("dur_us"),
         "n_events",
     )
@@ -2018,8 +2023,16 @@ def return_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed); all thresholds are conditional aggregates in ONE
     partial-agg'd reduction to a single row, exploded to the
     |thresholds|-row curve."""
-    sess = sessionize(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("session_start_us", "session_id")
+    return return_gaps_over(sessionize(spark, sf_dir))
+
+
+def return_gaps_over(sess: DataFrame) -> DataFrame:
+    """ev28's ladder over any per-user session frame carrying
+    ``session_start_us`` and ``session_end_us`` (last event time) — split
+    out so the streaming twin st17 runs the SAME rollup over st2's
+    watermark-finalized sessions. A user's sessions are disjoint, so the
+    start alone orders them."""
+    w = Window.partitionBy("user_id").orderBy("session_start_us")
     gaps = (
         sess.withColumn("next_start_us", F.lead("session_start_us").over(w))
         .filter(F.col("next_start_us").isNotNull())

@@ -438,54 +438,22 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_MAX_ITERS = 25
-
-
 def semantic_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dd9 — SEMANTIC dedup endgame: connected components over the
     embedding near-dup graph (dd5's banded-LSH pairs at cosine >= 0.4),
     with the canonical representative (min vec_id) kept per component —
-    the embedding-space twin of dd8's lexical pipeline. Label
-    propagation, one join + one aggregate per round, ``localCheckpoint``
-    to cut lineage; near-dup components are small cliques so rounds stay
-    O(diameter) tiny at any scale. Oracle: WITH RECURSIVE reachability
-    closure over the same banded candidate pairs."""
-    pairs = embedding_neardup_pairs(spark, sf_dir).select("vec_a", "vec_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("vec_b").alias("vec_a"), F.col("vec_a").alias("vec_b"))
-    ).select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id")
-        .withColumn("label", F.col("vec_id"))
-        .localCheckpoint(eager=True)
+    the embedding-space twin of dd8's lexical pipeline, through the SAME
+    ``label_components`` fixpoint (one join + one aggregate per round,
+    ``localCheckpoint`` to cut lineage; near-dup components are small
+    cliques so rounds stay O(diameter) tiny at any scale). Oracle: WITH
+    RECURSIVE reachability closure over the same banded candidate pairs."""
+    from .dedup import label_components  # noqa: PLC0415
+
+    labels = label_components(
+        load_table(spark, sf_dir, "embeddings"),
+        embedding_neardup_pairs(spark, sf_dir).select("vec_a", "vec_b"),
+        "vec_id",
     )
-    for _ in range(_CC_MAX_ITERS):
-        neigh = labels.join(edges, labels["vec_id"] == edges["src"]).select(
-            F.col("dst").alias("vec_id"), "label"
-        )
-        new_labels = (
-            labels.select("vec_id", "label")
-            .unionByName(neigh)
-            .groupBy("vec_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "vec_id")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # a diameter > _CC_MAX_ITERS chain would exit with wrong labels;
-        # fail loudly rather than return silently-mislabeled components
-        raise RuntimeError(
-            f"connected-components did not converge in {_CC_MAX_ITERS} rounds"
-        )
     return labels.select(
         "vec_id",
         F.col("label").alias("component_id"),

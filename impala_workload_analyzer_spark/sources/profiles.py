@@ -237,9 +237,6 @@ _SCAN_RE = re.compile(
     r"^\s+partitions=(?P<partitions>[0-9]+/[0-9]+) files=(?P<files>[0-9]+) "
     r"size=(?P<size>[0-9.]+[GMKB]+)\s*$"
 )
-_AVG_FRAG_HDR = re.compile(r"^Averaged Fragment F(?P<id>[0-9]+)$")
-_COORD_FRAG_HDR = re.compile(r"^Coordinator Fragment F(?P<id>[0-9]+)$")
-_INST_FRAG_HDR = re.compile(r"^Fragment F(?P<id>[0-9]+)$")
 _NODE_RE = re.compile(r"^(?P<name>.+_NODE) \(id=(?P<id>[0-9]+)\)$")
 _HOST_RE = re.compile(r"(?P<host>[^() ]+:[0-9]+)")
 _VERSION_RE = re.compile(

@@ -14,6 +14,29 @@ event + gap) precedes the final watermark (max event time - delay). The
 DuckDB oracle states exactly that predicate over ev3's sessionization, so
 even the append-mode row set is oracle-exact.
 
+Every twin is a source (``_stream_events`` / ``_stream_docs`` /
+``_stream_parsed``), an optional pure step, and one run call:
+
+- ``_drain(writer)`` is the ONE trigger site: ``availableNow`` over the
+  finite source, then wait for termination. ``_to_memory(df, name,
+  mode)`` drains into a named memory sink and returns the sink table;
+  snk7's ``foreachBatch`` writer drains through ``_drain`` too.
+- ``_keyed_state(df, key, step, out_ddl, state_ddl, mode, name, order)``
+  runs a keyed-state operator (``applyInPandasWithState``, no timeout).
+  Per key and micro-batch it concatenates the key's rows into one pandas
+  chunk, sorts it by ``order`` (if given) and calls the module-level pure
+  ``step(key, state_or_None, chunk) -> (new_state_or_None, rows)``:
+  ``state`` is the stored tuple (None before the key's first batch), a
+  returned None leaves the store untouched, and ``rows`` are tuples in
+  ``out_ddl``'s column order. In ``append`` mode the emitted rows are
+  final — every batch's rows are kept; in ``update`` mode a key's rows
+  are re-emitted each batch it changes in: st10/st22 emit per-batch
+  deltas, st9 reduces the re-emissions to the final state, and st3
+  publishes them as they are (one row per user under a one-batch
+  replay). Because a step sees only the chunk and its stored state,
+  N-batch == 1-batch is a property of the step alone and is checked per
+  step without Spark.
+
 Scale notes: the same plans run unchanged against a Kafka/Kinesis source at
 cluster scale; state-store size is bounded by (windows x types) for st1 and
 by open sessions for st2 — both keyed shuffles, no driver state.
@@ -21,12 +44,43 @@ by open sessions for st2 — both keyed shuffles, no driver state.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import json
+import math
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache_util import cache_dir
+from ..pipeline.events_analytics import (
+    _CMS_D,
+    _CMS_W,
+    _EV1_ORACLE,
+    _EV27_THRESH_MIN,
+    _EV28_THRESH_H,
+    _EV29_BIN_SQL,
+    _KMV_K,
+    _RATE_LOOKBACK,
+    _RATE_TAU,
+    _affinity_of_session_types,
+    _depth_curve_sql,
+    _drift_from_counts,
+    cms_buckets,
+    depth_survival_over,
+    motif_rollup,
+    return_gaps_over,
+    session_survival_over,
+)
+from ..pipeline.events_analytics import ORACLES as _EV_ORACLES
+from ..sources.profile_render import ensure_profiles
+from ..sources.profiles import ORACLES as _ING_ORACLES
+from ..sources.profiles import OP_SCHEMA, TS_SCHEMA, batch_parser, explode_time_series
+from ..sources.time_series_queries import ORACLES as _TS_ORACLES
+from ..sources.time_series_queries import skew_over
 
 _GAP = "30 minutes"
 
@@ -46,15 +100,42 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(spark.readStream.schema(schema).parquet(src_dir))
 
 
-def _run_to_memory(df, name: str, mode: str) -> None:
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
+def _drain(writer) -> None:
+    """Run ``writer`` (a configured ``DataStreamWriter``) to the end of the
+    finite source: the one trigger site of every twin and sink."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _to_memory(df: DataFrame, name: str, mode: str) -> DataFrame:
+    """Drain ``df`` into the memory sink ``name`` and return the sink table."""
+    _drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    return df.sparkSession.table(name)
+
+
+def _keyed_state(df: DataFrame, key: str, step, out_ddl: str, state_ddl: str,
+                 mode: str, name: str, order: tuple[str, ...] = ()) -> DataFrame:
+    """Run the pure ``step`` as a keyed-state operator over ``df`` grouped
+    by ``key`` and drain it into ``name`` (contract: module docstring)."""
+    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
+    from pyspark.sql.types import StructType  # noqa: PLC0415
+
+    columns = StructType.fromDDL(out_ddl).fieldNames()
+    order = list(order)
+
+    def fn(k, pdfs, state):
+        chunk = pd.concat(list(pdfs), ignore_index=True)
+        if order:
+            chunk = chunk.sort_values(order)
+        new_state, rows = step(k[0], state.get if state.exists else None, chunk)
+        if new_state is not None:
+            state.update(new_state)
+        yield pd.DataFrame(rows, columns=columns)
+
+    out = df.groupBy(key).applyInPandasWithState(
+        fn, out_ddl, state_ddl, mode, GroupStateTimeout.NoTimeout
     )
-    q.awaitTermination()
+    return _to_memory(out, name, mode)
 
 
 def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,8 +147,7 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"),
              F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"))
     )
-    _run_to_memory(agg, "st1_out", "complete")
-    return spark.table("st1_out").select(
+    return _to_memory(agg, "st1_out", "complete").select(
         F.unix_timestamp(F.col("w.start")).alias("window_start"),
         "event_type",
         "n_events",
@@ -87,8 +167,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"),
              F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"))
     )
-    _run_to_memory(agg, "st2_out", "append")
-    return spark.table("st2_out").select(
+    return _to_memory(agg, "st2_out", "append").select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("session_start_us"),
         F.unix_micros(F.col("w.end")).alias("session_end_us"),
@@ -122,19 +201,6 @@ def stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping key across executors — the standard keyed-state layout a
     Kafka-fed deployment would checkpoint; unbounded key cardinality is
     handled by state-store eviction policy, not driver memory."""
-    import json  # noqa: PLC0415
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     # value is quantized JVM-side: DECIMAL(18,6) bounds each element at
     # |v| < 1e12, so micro-units stay far inside int64 and the Python
     # side can accumulate with one vectorized column sum per batch.
@@ -144,59 +210,35 @@ def stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
         ).alias("value_micros"),
     )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("n_types", LongType()),
-            StructField("total_value", DoubleType()),
-            StructField("first_us", LongType()),
-            StructField("last_us", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("total_micros", LongType()),
-            StructField("min_us", LongType()),
-            StructField("max_us", LongType()),
-            StructField("types_json", StringType()),
-        ]
+    return _keyed_state(
+        ev, "user_id", _user_stats_step,
+        "user_id BIGINT, n_events BIGINT, n_types BIGINT, total_value DOUBLE,"
+        " first_us BIGINT, last_us BIGINT",
+        "n BIGINT, total_micros BIGINT, min_us BIGINT, max_us BIGINT,"
+        " types_json STRING",
+        "update", "st3_out",
     )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, total_micros, min_us, max_us, types_json = state.get
-            types = set(json.loads(types_json))
-        else:
-            n, total_micros, min_us, max_us, types = 0, 0, None, None, set()
-        chunk = pd.concat(list(pdfs), ignore_index=True)
-        if len(chunk):
-            n += len(chunk)
-            total_micros += int(chunk["value_micros"].sum())
-            ts_us = chunk["ts"].astype("int64") // 1000
-            lo, hi = int(ts_us.min()), int(ts_us.max())
-            min_us = lo if min_us is None else min(min_us, lo)
-            max_us = hi if max_us is None else max(max_us, hi)
-            types |= set(chunk["event_type"])
-        state.update(
-            (n, total_micros, min_us, max_us, json.dumps(sorted(types)))
-        )
-        # int/int true division is correctly rounded — the same double
-        # as float(Decimal(total_micros).scaleb(-6))
-        yield pd.DataFrame(
-            [(key[0], n, len(types), total_micros / 10**6, min_us, max_us)],
-            columns=["user_id", "n_events", "n_types", "total_value", "first_us", "last_us"],
-        )
 
-    agg = ev.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+def _user_stats_step(user_id, state, chunk):
+    """st3's step: fold the chunk into (count, exact micro-unit total,
+    first/last seen, type set) and emit the user's running profile."""
+    n, total_micros, min_us, max_us, types_json = state or (0, 0, None, None, "[]")
+    types = set(json.loads(types_json))
+    if len(chunk):
+        n += len(chunk)
+        total_micros += int(chunk["value_micros"].sum())
+        ts_us = chunk["ts"].astype("int64") // 1000
+        lo, hi = int(ts_us.min()), int(ts_us.max())
+        min_us = lo if min_us is None else min(min_us, lo)
+        max_us = hi if max_us is None else max(max_us, hi)
+        types |= set(chunk["event_type"])
+    # int/int true division is correctly rounded — the same double
+    # as float(Decimal(total_micros).scaleb(-6))
+    return (
+        (n, total_micros, min_us, max_us, json.dumps(sorted(types))),
+        [(user_id, n, len(types), total_micros / 10**6, min_us, max_us)],
     )
-    _run_to_memory(agg, "st3_out", "update")
-    return spark.table("st3_out")
 
 
 def _stream_parsed(spark: SparkSession, sf_dir: str, which: str,
@@ -216,9 +258,6 @@ def _stream_parsed(spark: SparkSession, sf_dir: str, which: str,
     reference's unique MongoDB index; a production run bounds the
     state with a watermark on ingest time (the fixture is a finite
     replay, so none is needed for the checks)."""
-    from ..sources.profile_render import ensure_profiles  # noqa: PLC0415
-    from ..sources.profiles import batch_parser  # noqa: PLC0415
-
     path = ensure_profiles(spark, sf_dir)
     lines = spark.readStream.text(path).select(
         F.split("value", " ").getItem(2).alias("blob"),
@@ -227,8 +266,7 @@ def _stream_parsed(spark: SparkSession, sf_dir: str, which: str,
     parsed = lines.mapInPandas(
         batch_parser(which, schema), schema=schema
     ).dropDuplicates(list(keys))
-    _run_to_memory(parsed, sink, "append")
-    return spark.table(sink)
+    return _to_memory(parsed, sink, "append")
 
 
 def streaming_profile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,8 +274,6 @@ def streaming_profile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tailing ingest (``_stream_parsed``) maintaining the deduped
     operators table, keyed (query_id, id). Batch/stream equivalence IS
     the check: the oracle is ing1's."""
-    from ..sources.profiles import OP_SCHEMA  # noqa: PLC0415
-
     return _stream_parsed(spark, sf_dir, "operators", OP_SCHEMA,
                           ("query_id", "id"), "st6_out")
 
@@ -250,8 +286,6 @@ def streaming_time_series_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``explode_time_series``), so the batch/stream column contract
     holds by construction. The oracle is ing6's: the stream must
     reproduce the batch harvest byte for byte."""
-    from ..sources.profiles import TS_SCHEMA, explode_time_series  # noqa: PLC0415
-
     return explode_time_series(_stream_parsed(
         spark, sf_dir, "time_series", TS_SCHEMA,
         ("query_id", "fragment_id", "instance"), "st20_out"))
@@ -264,9 +298,6 @@ def streaming_memory_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch/stream equivalence IS the check — the oracle is ts2's, so
     the stream-fed skew readout must reproduce the batch analytic byte
     for byte."""
-    from ..sources.profiles import TS_SCHEMA  # noqa: PLC0415
-    from ..sources.time_series_queries import skew_over  # noqa: PLC0415
-
     return skew_over(_stream_parsed(
         spark, sf_dir, "time_series", TS_SCHEMA,
         ("query_id", "fragment_id", "instance"), "st21_out"))
@@ -315,8 +346,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros("c_ts").alias("c_us"),
     )
-    _run_to_memory(pairs, "st7_out", "append")
-    return spark.table("st7_out")
+    return _to_memory(pairs, "st7_out", "append")
 
 
 _ANOM_WARMUP = 30  # events per key before z-scores are meaningful
@@ -339,65 +369,32 @@ def streaming_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is three doubles per key, partitioned by the grouping
     key — constant memory per key regardless of stream length; the same
     code consumes a Kafka topic unchanged."""
-    import math  # noqa: PLC0415
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     ev = _stream_events(spark, sf_dir).select(
         "event_type", "event_id", "value"
     )
-    out_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("z", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("mean", DoubleType()),
-            StructField("m2", DoubleType()),
-        ]
+    return _keyed_state(
+        ev, "event_type", _anomaly_step,
+        "event_id BIGINT, event_type STRING, value DOUBLE, z DOUBLE",
+        "n BIGINT, mean DOUBLE, m2 DOUBLE",
+        "append", "st5_out", order=("event_id",),
     )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        chunk = pd.concat(list(pdfs), ignore_index=True)
-        rows = []
-        if len(chunk):
-            chunk = chunk.sort_values("event_id")
-            for eid, v in zip(chunk["event_id"].tolist(),
-                              chunk["value"].tolist()):
-                if n >= _ANOM_WARMUP:
-                    std = math.sqrt(m2 / (n - 1))
-                    z = round((v - mean) / std, 6)
-                    if abs(z) > _ANOM_TAU:
-                        rows.append((int(eid), key[0], float(v), z))
-                n += 1
-                d = v - mean
-                mean += d / n
-                m2 += d * (v - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(rows, columns=["event_id", "event_type", "value", "z"])
 
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(out, "st5_out", "append")
-    return spark.table("st5_out")
+def _anomaly_step(event_type, state, chunk):
+    """st5's step: score each event against the Welford moments of the
+    events before it, then fold it in."""
+    n, mean, m2 = state or (0, 0.0, 0.0)
+    rows = []
+    for eid, v in zip(chunk["event_id"].tolist(), chunk["value"].tolist()):
+        if n >= _ANOM_WARMUP:
+            z = round((v - mean) / math.sqrt(m2 / (n - 1)), 6)
+            if abs(z) > _ANOM_TAU:
+                rows.append((int(eid), event_type, float(v), z))
+        n += 1
+        d = v - mean
+        mean += d / n
+        m2 += d * (v - mean)
+    return (n, mean, m2), rows
 
 
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,8 +421,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type", "minute_start"])
         .select("user_id", "event_type", "minute_start")
     )
-    _run_to_memory(keys, "st4_out", "append")
-    return spark.table("st4_out")
+    return _to_memory(keys, "st4_out", "append")
 
 
 # st1 shares ev1's oracle text (batch/stream equivalence IS the check).
@@ -435,9 +431,6 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gaps-and-islands sessionization filtered by that predicate reproduces
 # the streaming output row-for-row (the boundary case end == watermark
 # does not occur in the fixtures; both < and <= match empirically).
-from ..pipeline.events_analytics import _EV1_ORACLE  # noqa: E402
-from ..pipeline.events_analytics import ORACLES as _EV_ORACLES  # noqa: E402
-
 _ST2_ORACLE = f"""
     WITH t AS (SELECT user_id, event_id, value, epoch_us(ts) AS t FROM events),
     flagged AS (
@@ -460,8 +453,6 @@ _ST2_ORACLE = f"""
     SELECT s.user_id, s.session_start_us, s.session_end_us, s.n_events, s.total_value
     FROM s, wm WHERE s.session_end_us < wm.watermark_us"""
 
-from ..sources.profiles import ORACLES as _ING_ORACLES  # noqa: E402
-from ..sources.time_series_queries import ORACLES as _TS_ORACLES  # noqa: E402
 
 def streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st8 — ev17's Count-Min sketch maintained as a STREAMING
@@ -472,8 +463,6 @@ def streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     D x W rows regardless of key cardinality or stream length, so the
     heavy-hitter estimate survives unbounded streams with bounded
     memory; the probe side stays ev17's batch join."""
-    from ..pipeline.events_analytics import cms_buckets  # noqa: PLC0415
-
     ev = _stream_events(spark, sf_dir)
     buckets = cms_buckets()
     agg = (
@@ -481,8 +470,7 @@ def streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("hash_row", "bucket")
         .agg(F.count("*").alias("c"))
     )
-    _run_to_memory(agg, "st8_out", "complete")
-    return spark.table("st8_out").select(
+    return _to_memory(agg, "st8_out", "complete").select(
         F.col("hash_row").cast("bigint").alias("hash_row"),
         F.col("bucket").cast("bigint").alias("bucket"),
         "c",
@@ -505,133 +493,51 @@ def streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stored k-min set) union (batch distinct) -> k smallest — associative
     and commutative, so micro-batch boundaries can never change the
     result."""
-    import hashlib  # noqa: PLC0415
-    import json  # noqa: PLC0415
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..pipeline.events_analytics import _KMV_K  # noqa: PLC0415
-
     ev = _stream_events(spark, sf_dir).select("event_type", "user_id")
-
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("rk", LongType()),
-            StructField("h", LongType()),
-        ]
+    emitted = _keyed_state(
+        ev, "event_type", _kmv_step,
+        "event_type STRING, rk BIGINT, h BIGINT", "mins_json STRING",
+        "update", "st9_out",
     )
-    state_schema = StructType([StructField("mins_json", StringType())])
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        mins = set(json.loads(state.get[0])) if state.exists else set()
-        for pdf in pdfs:
-            for uid in pdf["user_id"]:
-                h = int(hashlib.md5(str(int(uid)).encode()).hexdigest()[:15], 16)
-                mins.add(h)
-                if len(mins) > _KMV_K:
-                    mins.discard(max(mins))
-        kept = sorted(mins)
-        state.update((json.dumps(kept),))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]] * len(kept),
-                "rk": range(1, len(kept) + 1),
-                "h": kept,
-            }
-        )
-
-    agg = ev.groupBy("event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(agg, "st9_out", "update")
     # update mode re-emits a key's (possibly shorter, element-wise larger)
     # min set every micro-batch it changes in; the i-th smallest of a
     # growing set is monotone non-increasing, so min-per-rank over all
     # emissions IS the final state under any batch split
     return (
-        spark.table("st9_out")
+        emitted
         .groupBy("event_type", F.col("rk").cast("bigint").alias("rk"))
         .agg(F.min("h").cast("bigint").alias("h"))
     )
 
 
+def _kmv_step(event_type, state, chunk):
+    """st9's step: merge the chunk's user hashes into the stored k-min
+    set and emit it ranked."""
+    mins = set(json.loads(state[0])) if state else set()
+    for uid in chunk["user_id"]:
+        mins.add(int(hashlib.md5(str(int(uid)).encode()).hexdigest()[:15], 16))
+        if len(mins) > _KMV_K:
+            mins.discard(max(mins))
+    kept = sorted(mins)
+    return (json.dumps(kept),), [
+        (event_type, rk, h) for rk, h in enumerate(kept, start=1)
+    ]
+
+
 def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st10 — ev19's event-type transition matrix maintained streaming:
-    per-user keyed state holds ONLY the last seen event (us, event_id,
-    type) — constant bytes per user — and each micro-batch emits exactly
-    the new consecutive bigrams, with the stored last event bridging the
-    batch boundary. The final rollup (counts + per-from normalization)
+    per-user keyed state holds ONLY the last seen event type — constant
+    bytes per user — and each micro-batch emits exactly the new
+    consecutive bigrams, with the stored type bridging the batch
+    boundary. The final rollup (counts + per-from normalization)
     runs over the emitted bigram rows, which are type-cardinality² after
     aggregation. Checked against ev19's batch oracle — stream equals
     batch on the in-order finite source, the st1/st8/st9 witness."""
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    ev = _stream_events(spark, sf_dir).selectExpr(
-        "user_id", "event_type", "unix_micros(ts) AS us", "event_id"
-    )
-
-    out_schema = StructType(
-        [
-            StructField("from_type", StringType()),
-            StructField("to_type", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_us", LongType()),
-            StructField("last_eid", LongType()),
-            StructField("last_type", StringType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
-            return
-        batch = pd.concat(frames).sort_values(["us", "event_id"])
-        types = batch["event_type"].tolist()
-        seq = ([state.get[2]] if state.exists else []) + types
-        last = batch.iloc[-1]
-        state.update((int(last["us"]), int(last["event_id"]),
-                      str(last["event_type"])))
-        if len(seq) > 1:
-            yield pd.DataFrame(
-                {"from_type": seq[:-1], "to_type": seq[1:]}
-            )
-
-    bigrams = ev.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(bigrams, "st10_out", "update")
     counts = (
-        spark.table("st10_out")
+        _ngrams(spark, sf_dir, 2, "from_type STRING, to_type STRING", "st10_out")
         .groupBy("from_type", "to_type")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    from pyspark.sql import Window  # noqa: PLC0415
-
     wf = Window.partitionBy("from_type")
     return counts.select(
         "from_type",
@@ -641,9 +547,29 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _st9_oracle() -> str:
-    from ..pipeline.events_analytics import _KMV_K  # noqa: PLC0415
+def _ngrams(spark: SparkSession, sf_dir: str, n: int, out_ddl: str,
+            name: str) -> DataFrame:
+    """Every user's consecutive event-type n-grams in (ts, event_id) order,
+    streamed through ``_ngram_step`` (st10: n = 2, st22: n = 3)."""
+    ev = _stream_events(spark, sf_dir).selectExpr(
+        "user_id", "event_type", "unix_micros(ts) AS us", "event_id"
+    )
+    return _keyed_state(
+        ev, "user_id", functools.partial(_ngram_step, n), out_ddl,
+        "tail ARRAY<STRING>", "update", name, order=("us", "event_id"),
+    )
 
+
+def _ngram_step(n, user_id, state, chunk):
+    """The st10/st22 step: emit the chunk's new n-grams, bridged to the
+    previous batch by the stored tail (the user's last n - 1 types)."""
+    if not len(chunk):
+        return None, []
+    seq = (list(state[0]) if state else []) + chunk["event_type"].tolist()
+    return (seq[-(n - 1):],), list(zip(*(seq[i:] for i in range(n))))
+
+
+def _st9_oracle() -> str:
     return f"""
         WITH hashes AS (
           SELECT DISTINCT event_type,
@@ -675,86 +601,57 @@ def streaming_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio doubles are display values rounded after the decision. As with
     st5/st9/st10, stream==batch is the witness on the in-order finite
     source (each chunk is processed in (ts, event_id) order)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return _keyed_state(
+        _hourly_source(spark, sf_dir), "event_type", _rate_alert_step,
+        "event_type STRING, hour_start BIGINT, n_events BIGINT,"
+        " baseline DOUBLE, rate_ratio DOUBLE",
+        _HOURS_STATE, "append", "st12_out", order=("epoch", "event_id"),
     )
 
-    from ..pipeline.events_analytics import _RATE_LOOKBACK, _RATE_TAU  # noqa: PLC0415
 
-    tau = int(_RATE_TAU)
-    ev = _stream_events(spark, sf_dir).select(
+def _hourly_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _stream_events(spark, sf_dir).select(
         "event_type", "event_id", F.unix_timestamp("ts").alias("epoch")
     )
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("hour_start", LongType()),
-            StructField("n_events", LongType()),
-            StructField("baseline", DoubleType()),
-            StructField("rate_ratio", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("hist", ArrayType(LongType())),
-            StructField("cur_hour", LongType()),
-            StructField("cur_n", LongType()),
-        ]
-    )
 
-    def fn(key, pdfs, state: "GroupState"):
-        hist, cur_hour, cur_n = (
-            state.get if state.exists else ([], -1, 0)
-        )
-        hist = list(hist)
-        rows = []
 
-        def close_bucket():
-            nonlocal hist
-            if len(hist) >= _RATE_LOOKBACK:
-                prev = sum(hist[-_RATE_LOOKBACK:])
-                if cur_n * _RATE_LOOKBACK >= tau * prev:
-                    rows.append(
-                        (
-                            key[0],
-                            int(cur_hour),
-                            int(cur_n),
-                            round(prev / float(_RATE_LOOKBACK), 6),
-                            round(cur_n * _RATE_LOOKBACK / float(prev), 6),
-                        )
-                    )
+_HOURS_STATE = "hist ARRAY<BIGINT>, cur_hour BIGINT, cur_n BIGINT"
+
+
+def _close_hours(state, epochs):
+    """The closed-hour bucket discipline st12 and st13 share: advance
+    ``(hist, cur_hour, cur_n)`` — the trailing ``_RATE_LOOKBACK`` closed
+    hourly counts plus the open bucket — over in-order epochs. A bucket
+    closes when the next hour's first event arrives; the open one is
+    never scored. Returns the new state and, per closed bucket, its
+    ``(hour, count, trailing closed counts before it)``."""
+    hist, cur_hour, cur_n = state or ([], -1, 0)
+    hist = list(hist)
+    closed = []
+    for ep in epochs:
+        h = (ep // 3600) * 3600
+        if cur_hour == -1:
+            cur_hour, cur_n = h, 0
+        elif h != cur_hour:
+            closed.append((int(cur_hour), int(cur_n), hist))
             hist = (hist + [cur_n])[-_RATE_LOOKBACK:]
+            cur_hour, cur_n = h, 0
+        cur_n += 1
+    return (hist, int(cur_hour), int(cur_n)), closed
 
-        chunk = pd.concat(list(pdfs), ignore_index=True)
-        if len(chunk):
-            chunk = chunk.sort_values(["epoch", "event_id"])
-            for ep in chunk["epoch"].tolist():
-                h = (ep // 3600) * 3600
-                if cur_hour == -1:
-                    cur_hour, cur_n = h, 0
-                elif h != cur_hour:
-                    close_bucket()
-                    cur_hour, cur_n = h, 0
-                cur_n += 1
-        state.update((hist, int(cur_hour), int(cur_n)))
-        yield pd.DataFrame(
-            rows,
-            columns=["event_type", "hour_start", "n_events", "baseline",
-                     "rate_ratio"],
-        )
 
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(out, "st12_out", "append")
-    return spark.table("st12_out")
+def _rate_alert_step(event_type, state, chunk):
+    """st12's step: alert on each closed bucket with a full trailing
+    window whose count reaches ``_RATE_TAU`` x the trailing mean."""
+    state, closed = _close_hours(state, chunk["epoch"].tolist())
+    rows = []
+    for hour, n, trail in closed:
+        prev = sum(trail)
+        if len(trail) < _RATE_LOOKBACK or n * _RATE_LOOKBACK < int(_RATE_TAU) * prev:
+            continue
+        rows.append((event_type, hour, n, round(prev / float(_RATE_LOOKBACK), 6),
+                     round(n * _RATE_LOOKBACK / float(prev), 6)))
+    return state, rows
 
 
 def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -774,80 +671,29 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     never evaluated, so the DuckDB oracle is the batch twin over closed
     hours (window prefix-sum minus running-min). Stream==batch on the
     in-order finite source, like st5/st9/st10/st12."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return _keyed_state(
+        _hourly_source(spark, sf_dir), "event_type", _cusum_step,
+        "event_type STRING, hour_start BIGINT, n_events BIGINT, cusum BIGINT",
+        _HOURS_STATE + ", level BIGINT", "append", "st13_out",
+        order=("epoch", "event_id"),
     )
 
-    from ..pipeline.events_analytics import _RATE_LOOKBACK  # noqa: PLC0415
 
-    ev = _stream_events(spark, sf_dir).select(
-        "event_type", "event_id", F.unix_timestamp("ts").alias("epoch")
-    )
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("hour_start", LongType()),
-            StructField("n_events", LongType()),
-            StructField("cusum", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("hist", ArrayType(LongType())),
-            StructField("cur_hour", LongType()),
-            StructField("cur_n", LongType()),
-            StructField("level", LongType()),
-        ]
-    )
-
-    def fn(key, pdfs, state: "GroupState"):
-        hist, cur_hour, cur_n, level = (
-            state.get if state.exists else ([], -1, 0, 0)
-        )
-        hist = list(hist)
-        rows = []
-
-        def close_bucket():
-            nonlocal hist, level
-            if len(hist) >= _RATE_LOOKBACK:
-                z = cur_n * _RATE_LOOKBACK - sum(hist[-_RATE_LOOKBACK:])
-                level = max(0, level + z)
-                if level > 0:
-                    rows.append((key[0], int(cur_hour), int(cur_n), int(level)))
-            hist = (hist + [cur_n])[-_RATE_LOOKBACK:]
-
-        chunk = pd.concat(list(pdfs), ignore_index=True)
-        if len(chunk):
-            chunk = chunk.sort_values(["epoch", "event_id"])
-            for ep in chunk["epoch"].tolist():
-                h = (ep // 3600) * 3600
-                if cur_hour == -1:
-                    cur_hour, cur_n = h, 0
-                elif h != cur_hour:
-                    close_bucket()
-                    cur_hour, cur_n = h, 0
-                cur_n += 1
-        state.update((hist, int(cur_hour), int(cur_n), int(level)))
-        yield pd.DataFrame(
-            rows, columns=["event_type", "hour_start", "n_events", "cusum"]
-        )
-
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(out, "st13_out", "append")
-    return spark.table("st13_out")
+def _cusum_step(event_type, state, chunk):
+    """st13's step: on each closed bucket with a full trailing window,
+    ``S = max(0, S + count * L - trailing_sum)``; emit while S > 0."""
+    level = state[3] if state else 0
+    hours, closed = _close_hours(state and state[:3], chunk["epoch"].tolist())
+    rows = []
+    for hour, n, trail in closed:
+        if len(trail) >= _RATE_LOOKBACK:
+            level = max(0, level + n * _RATE_LOOKBACK - sum(trail))
+            if level > 0:
+                rows.append((event_type, hour, n, int(level)))
+    return (*hours, int(level)), rows
 
 
 def _st13_oracle() -> str:
-    from ..pipeline.events_analytics import _RATE_LOOKBACK  # noqa: PLC0415
-
     return f"""
         WITH hourly AS (
           SELECT event_type,
@@ -884,8 +730,6 @@ def _st13_oracle() -> str:
 
 
 def _st12_oracle() -> str:
-    from ..pipeline.events_analytics import _RATE_LOOKBACK, _RATE_TAU  # noqa: PLC0415
-
     return f"""
         WITH hourly AS (
           SELECT event_type,
@@ -941,8 +785,7 @@ def streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bit")
         .agg(F.count("*").alias("n_hashes"))
     )
-    _run_to_memory(agg, "st11_out", "complete")
-    return spark.table("st11_out").select(
+    return _to_memory(agg, "st11_out", "complete").select(
         F.col("bit").cast("bigint").alias("bit"), "n_hashes"
     )
 
@@ -977,8 +820,6 @@ def _st11_oracle() -> str:
 
 
 def _st8_oracle() -> str:
-    from ..pipeline.events_analytics import _CMS_D, _CMS_W  # noqa: PLC0415
-
     return f"""
         WITH rows_i AS (SELECT unnest(range(0, {_CMS_D})) AS row_i)
         SELECT row_i AS hash_row,
@@ -1012,50 +853,28 @@ def streaming_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one long per event type; each micro-batch collapses
     to its distinct hour set before the python loop, so per-batch work
     is bounded by hours-touched, not event count."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-    from pyspark.sql.types import (  # noqa: PLC0415
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     ev = _stream_events(spark, sf_dir).select(
         "event_type", F.unix_timestamp("ts").alias("epoch")
     )
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("gap_start", LongType()),
-            StructField("gap_end", LongType()),
-            StructField("gap_hours", LongType()),
-        ]
+    return _keyed_state(
+        ev, "event_type", _gap_step,
+        "event_type STRING, gap_start BIGINT, gap_end BIGINT, gap_hours BIGINT",
+        "last_hour BIGINT", "append", "st14_out",
     )
-    state_schema = StructType([StructField("last_hour", LongType())])
 
-    def fn(key, pdfs, state: "GroupState"):
-        last = state.get[0] if state.exists else -1
-        rows = []
-        chunk = pd.concat(list(pdfs), ignore_index=True)
-        if len(chunk):
-            for h in sorted({int(e) // 3600 * 3600 for e in chunk["epoch"]}):
-                if last >= 0 and h > last + 3600:
-                    rows.append(
-                        (key[0], last + 3600, h, (h - last) // 3600 - 1)
-                    )
-                if h > last:
-                    last = h
-            state.update((int(last),))
-        yield pd.DataFrame(
-            rows, columns=["event_type", "gap_start", "gap_end", "gap_hours"]
-        )
 
-    out = ev.groupBy("event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(out, "st14_out", "append")
-    return spark.table("st14_out")
+def _gap_step(event_type, state, chunk):
+    """st14's step: walk the chunk's distinct hours past the stored last
+    hour, emitting each interior run of empty hours it skips."""
+    if not len(chunk):
+        return None, []
+    last = state[0] if state else -1
+    rows = []
+    for h in sorted({int(e) // 3600 * 3600 for e in chunk["epoch"]}):
+        if last >= 0 and h > last + 3600:
+            rows.append((event_type, last + 3600, h, (h - last) // 3600 - 1))
+        last = max(last, h)
+    return (int(last),), rows
 
 
 _ST14_ORACLE = """
@@ -1104,8 +923,7 @@ def streaming_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").cast("bigint").alias("max_doc_id"),
         )
     )
-    _run_to_memory(agg, "st15_out", "complete")
-    return spark.table("st15_out")
+    return _to_memory(agg, "st15_out", "complete")
 
 
 def _st15_oracle() -> str:
@@ -1195,9 +1013,6 @@ SPARK_QUERIES = {
 }
 
 
-_ST16_THRESH_MIN = (0, 1, 2, 5, 10, 30, 60)
-
-
 def streaming_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st16 — ev27's survival curve over the STREAMING session set: the
     duration ladder computed from st2's watermark-finalized
@@ -1212,48 +1027,16 @@ def streaming_session_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the streaming agg is st2's (state bounded by open sessions);
     the survival rollup is a one-row conditional aggregate over the
     emitted session table, exploded to the constant-width ladder."""
-    sess = streaming_sessions(spark, sf_dir).select(
-        (
-            F.col("session_end_us")
-            - F.lit(30 * 60 * 1_000_000)
-            - F.col("session_start_us")
-        ).alias("dur_us"),
-        "n_events",
-    )
-    conds = [
-        (F.col("dur_us") >= F.lit(t * 60 * 1_000_000)).cast("bigint")
-        for t in _ST16_THRESH_MIN
-    ]
-    agg = sess.agg(
-        F.count("*").cast("bigint").alias("n_total"),
-        *[F.sum(c).cast("bigint").alias(f"s{t}")
-          for t, c in zip(_ST16_THRESH_MIN, conds)],
-        *[F.sum(F.col("n_events") * c).cast("bigint").alias(f"e{t}")
-          for t, c in zip(_ST16_THRESH_MIN, conds)],
-    )
-    return agg.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).cast("bigint").alias("thr_min"),
-                        F.col("n_total").alias("n_sessions_total"),
-                        F.col(f"s{t}").alias("n_sessions_surviving"),
-                        F.col(f"e{t}").alias("n_events_surviving"),
-                    )
-                    for t in _ST16_THRESH_MIN
-                ]
-            )
-        ).alias("r")
-    ).select(
-        "r.thr_min",
-        "r.n_sessions_total",
-        "r.n_sessions_surviving",
-        "r.n_events_surviving",
-        F.expr(
-            "CAST(FLOOR(r.n_sessions_surviving * 1000000"
-            " / CAST(r.n_sessions_total AS DOUBLE)) AS BIGINT)"
-        ).alias("survival_ppm"),
+    return session_survival_over(_finalized_sessions(spark, sf_dir))
+
+
+def _finalized_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """st2's sessions with ``session_end_us`` moved back from the window
+    end to the last event — ``session_window`` pads it by the 30-min gap
+    — so ev27/ev28's batch rollups apply unchanged."""
+    sess = streaming_sessions(spark, sf_dir)
+    return sess.withColumn(
+        "session_end_us", F.col("session_end_us") - F.lit(30 * 60 * 1_000_000)
     )
 
 
@@ -1266,7 +1049,7 @@ ORACLES["st16_streaming_session_survival"] = f"""
                    AS dur_us,
                  n_events
           FROM fin),
-        thr AS (SELECT CAST(unnest([{", ".join(str(t) for t in _ST16_THRESH_MIN)}]) AS BIGINT)
+        thr AS (SELECT CAST(unnest([{", ".join(str(t) for t in _EV27_THRESH_MIN)}]) AS BIGINT)
                        AS thr_min)
         SELECT CAST(t.thr_min AS BIGINT) AS thr_min,
                CAST(COUNT(*) AS BIGINT) AS n_sessions_total,
@@ -1286,11 +1069,6 @@ ORACLES["st16_streaming_session_survival"] = f"""
 SPARK_QUERIES["st16_streaming_session_survival"] = streaming_session_survival
 
 
-# st17 shares ev28's hour ladder so the live curve lines up with the
-# batch CDF row for row.
-from ..pipeline.events_analytics import _EV28_THRESH_H as _ST17_THRESH_H  # noqa: E402
-
-
 def streaming_return_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st17 — ev28's return-time CDF over the STREAMING session set:
     inter-session gaps computed from st2's watermark-finalized
@@ -1307,53 +1085,7 @@ def streaming_return_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the streaming agg is st2's (state bounded by open sessions);
     the LEAD rides the emitted table's user keying, and the ladder is
     one conditional-aggregate reduction exploded to constant width."""
-    sess = streaming_sessions(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("session_start_us")
-    gaps = (
-        sess.withColumn("next_start_us", F.lead("session_start_us").over(w))
-        .filter(F.col("next_start_us").isNotNull())
-        .select(
-            (
-                F.col("next_start_us")
-                - (F.col("session_end_us") - F.lit(30 * 60 * 1_000_000))
-            ).alias("gap_us")
-        )
-    )
-    conds = [
-        (F.col("gap_us") <= F.lit(t * 3_600_000_000)).cast("bigint")
-        for t in _ST17_THRESH_H
-    ]
-    agg = gaps.agg(
-        F.count("*").cast("bigint").alias("n_total"),
-        *[F.sum(c).cast("bigint").alias(f"r{t}")
-          for t, c in zip(_ST17_THRESH_H, conds)],
-        *[F.sum(F.col("gap_us") * c).cast("bigint").alias(f"g{t}")
-          for t, c in zip(_ST17_THRESH_H, conds)],
-    )
-    return agg.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).cast("bigint").alias("thr_hours"),
-                        F.col("n_total").alias("n_gaps_total"),
-                        F.col(f"r{t}").alias("n_returned_within"),
-                        F.col(f"g{t}").alias("gap_us_within_sum"),
-                    )
-                    for t in _ST17_THRESH_H
-                ]
-            )
-        ).alias("r")
-    ).select(
-        "r.thr_hours",
-        "r.n_gaps_total",
-        "r.n_returned_within",
-        "r.gap_us_within_sum",
-        F.expr(
-            "CAST(FLOOR(r.n_returned_within * 1000000"
-            " / CAST(r.n_gaps_total AS DOUBLE)) AS BIGINT)"
-        ).alias("return_ppm"),
-    )
+    return return_gaps_over(_finalized_sessions(spark, sf_dir))
 
 
 # st17's oracle nests st2's finalized-session predicate; session ends
@@ -1366,7 +1098,7 @@ ORACLES["st17_streaming_return_gaps"] = f"""
                        ORDER BY session_start_us) AS nxt
               FROM fin),
         gaps AS (SELECT nxt - en AS gap_us FROM g WHERE nxt IS NOT NULL),
-        thr AS (SELECT CAST(unnest([{", ".join(str(t) for t in _ST17_THRESH_H)}]) AS BIGINT)
+        thr AS (SELECT CAST(unnest([{", ".join(str(t) for t in _EV28_THRESH_H)}]) AS BIGINT)
                        AS thr_hours)
         SELECT CAST(t.thr_hours AS BIGINT) AS thr_hours,
                CAST(COUNT(*) AS BIGINT) AS n_gaps_total,
@@ -1401,10 +1133,6 @@ def streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     goalposts), attached to the stream as a stream-static broadcast
     join before any state update."""
     from ..io import load_table  # noqa: PLC0415
-    from ..pipeline.events_analytics import (  # noqa: PLC0415
-        _EV29_BIN_SQL,
-        _drift_from_counts,
-    )
 
     bounds = load_table(spark, sf_dir, "events").agg(
         F.min(F.col("value").cast("double")).alias("vmin"),
@@ -1422,8 +1150,7 @@ def streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("week", "bin")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    _run_to_memory(agg, "st18_out", "complete")
-    counts = spark.table("st18_out").select(
+    counts = _to_memory(agg, "st18_out", "complete").select(
         F.col("week").cast("bigint").alias("week"),
         F.col("bin").cast("bigint").alias("bin"),
         F.col("n").cast("bigint").alias("n"),
@@ -1433,8 +1160,6 @@ def streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # complete-mode drain of the finite source equals the batch build, so
 # st18's oracle IS ev29's.
-from ..pipeline.events_analytics import ORACLES as _EV_ORACLES  # noqa: E402
-
 ORACLES["st18_streaming_value_drift"] = _EV_ORACLES["ev29_weekly_value_drift"]
 SPARK_QUERIES["st18_streaming_value_drift"] = streaming_value_drift
 
@@ -1462,10 +1187,6 @@ def streaming_exactly_once_export(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregation. The export root is cleared per run so the readback
     reflects exactly this drain — at 100 TB the same role is played by
     batch-id-keyed object-store prefixes and a manifest commit."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     base = cache_dir("export", sf_dir)
     out = _snk7_out(sf_dir)
     shutil.rmtree(out, ignore_errors=True)
@@ -1473,14 +1194,8 @@ def streaming_exactly_once_export(spark: SparkSession, sf_dir: str) -> DataFrame
     chk = tempfile.mkdtemp(prefix="snk7_chk_", dir=base)
 
     ev = _stream_events(spark, sf_dir).select("event_id", "event_type")
-
-    q = (
-        ev.writeStream.foreachBatch(_snk7_write_batch(out))
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(ev.writeStream.foreachBatch(_snk7_write_batch(out))
+           .option("checkpointLocation", chk))
     shutil.rmtree(chk, ignore_errors=True)
     return _snk7_readback(spark, out)
 
@@ -1493,8 +1208,6 @@ def _snk7_write_batch(out: str):
     """snk7's foreachBatch writer, exposed so the replay test can
     re-deliver a batch_id over the EXISTING export directory — the real
     failure-recovery path — instead of only comparing two clean runs."""
-    import os  # noqa: PLC0415
-
     def write_batch(batch_df, batch_id: int) -> None:
         # idempotent by construction: a replay of batch_id rewrites
         # exactly its own directory
@@ -1537,16 +1250,13 @@ def streaming_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     at most |type vocab| elements; the rollup downstream of the memory
     sink is ev30's — session-keyed pair join bounded by C(|vocab|, 2)
     per session, broadcast marginals."""
-    from ..pipeline.events_analytics import _affinity_of_session_types  # noqa: PLC0415
-
     agg = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", _GAP).alias("w"), "user_id")
         .agg(F.collect_set("event_type").alias("types"))
     )
-    _run_to_memory(agg, "st19_out", "append")
-    st = spark.table("st19_out").select(
+    st = _to_memory(agg, "st19_out", "append").select(
         "user_id",
         # the finalized window start is unique per (user, session): it IS
         # the session id for the rollup
@@ -1606,84 +1316,17 @@ SPARK_QUERIES["st19_streaming_type_affinity"] = streaming_type_affinity
 
 def streaming_trigram_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st22 — ev32's top behavioral motifs maintained streaming: per-user
-    keyed state holds ONLY the last TWO seen events (us, event_id, the
-    two most recent types) — constant bytes per user — and each
-    micro-batch emits exactly the new consecutive trigrams, with the
-    stored tail bridging batch boundaries (the st10 bigram pattern, one
-    event deeper). The rollup (count, global rank, ppm share) is ev32's
+    keyed state holds ONLY the two most recent event types — constant
+    bytes per user — and each micro-batch emits exactly the new
+    consecutive trigrams, with the stored tail bridging batch boundaries
+    (st10's n-gram step, one event deeper). The rollup (count, global rank, ppm share) is ev32's
     shared ``motif_rollup`` over the emitted trigram rows, which are
     type-cardinality^3 after aggregation — one shared body, so
     batch/stream motif tables cannot drift. Checked against ev32's
     batch oracle: stream equals batch on the in-order finite source,
     the st1/st8/st9/st10 witness."""
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.streaming.state import (  # noqa: PLC0415
-        GroupState,
-        GroupStateTimeout,
-    )
-    from pyspark.sql.types import (  # noqa: PLC0415
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..pipeline.events_analytics import motif_rollup  # noqa: PLC0415
-
-    ev = _stream_events(spark, sf_dir).selectExpr(
-        "user_id", "event_type", "unix_micros(ts) AS us", "event_id"
-    )
-
-    out_schema = StructType(
-        [
-            StructField("t1", StringType()),
-            StructField("t2", StringType()),
-            StructField("t3", StringType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_us", LongType()),
-            StructField("last_eid", LongType()),
-            StructField("prev_type", StringType()),  # second-most-recent
-            StructField("last_type", StringType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
-            return
-        batch = pd.concat(frames).sort_values(["us", "event_id"])
-        types = batch["event_type"].tolist()
-        tail = []
-        if state.exists:
-            prev_t, last_t = state.get[2], state.get[3]
-            tail = ([prev_t] if prev_t is not None else []) + [last_t]
-        seq = tail + types
-        last = batch.iloc[-1]
-        state.update(
-            (
-                int(last["us"]),
-                int(last["event_id"]),
-                seq[-2] if len(seq) > 1 else None,
-                str(last["event_type"]),
-            )
-        )
-        if len(seq) > 2:
-            yield pd.DataFrame(
-                {"t1": seq[:-2], "t2": seq[1:-1], "t3": seq[2:]}
-            )
-
-    tri = ev.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-    _run_to_memory(tri, "st22_out", "update")
-    return motif_rollup(spark.table("st22_out"))
+    return motif_rollup(_ngrams(
+        spark, sf_dir, 3, "t1 STRING, t2 STRING, t3 STRING", "st22_out"))
 
 
 ORACLES["st22_streaming_trigram_motifs"] = _EV_ORACLES["ev32_trigram_motifs"]
@@ -1703,12 +1346,9 @@ def streaming_depth_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     withheld, st2's documented semantics), so the oracle is ev33's
     ladder over st2's finalized-prefix session oracle — same curve
     SQL, prefix-scoped source."""
-    from ..pipeline.events_analytics import depth_survival_over  # noqa: PLC0415
-
     return depth_survival_over(streaming_sessions(spark, sf_dir))
 
 
-from ..pipeline.events_analytics import _depth_curve_sql  # noqa: E402
 
 ORACLES["st23_streaming_depth_survival"] = _depth_curve_sql(_ST2_ORACLE)
 SPARK_QUERIES["st23_streaming_depth_survival"] = streaming_depth_survival

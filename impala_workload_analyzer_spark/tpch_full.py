@@ -35,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .io import load_table
+from .tpch import _DEC, _t
+from .tpch import _REV as _REV_SQL
 
-_DEC = "decimal(18,2)"
 
 # revenue expression shared with tpch.py: exact decimal, scale 4
 def _rev():
@@ -45,16 +45,6 @@ def _rev():
         F.col("l_extendedprice").cast(_DEC)
         * (F.lit(1).cast(_DEC) - F.col("l_discount").cast("decimal(4,2)"))
     ).cast("decimal(18,4)")
-
-
-_REV_SQL = (
-    "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) "
-    "- CAST(l_discount AS DECIMAL(4,2))) AS DECIMAL(18,4))"
-)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -783,6 +783,7 @@ def test_streaming_ingest_across_microbatches(spark, sf_dir):
         batch_parser,
         parsed_operators,
     )
+    from impala_workload_analyzer_spark.streaming.stream_queries import _to_memory
 
     path = ensure_profiles(spark, sf_dir)
     lines = (
@@ -795,12 +796,7 @@ def test_streaming_ingest_across_microbatches(spark, sf_dir):
     ops = lines.mapInPandas(
         batch_parser("operators", OP_SCHEMA), schema=OP_SCHEMA
     ).dropDuplicates(["query_id", "id"])
-    q = (
-        ops.writeStream.format("memory").queryName("st6_mb_out")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.table("st6_mb_out")
+    got = _to_memory(ops, "st6_mb_out", "append")
     batch = parsed_operators(spark, sf_dir)
     assert got.count() == batch.count()
     # identical (query_id, id, name) key set
