@@ -55,11 +55,11 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_enrich(args) -> int:
-    from .sql_introspect.queries import features_rollup, sql_features  # noqa: PLC0415
+    from .sql_introspect.queries import feature_table, features_rollup  # noqa: PLC0415
 
     spark = _spark()
     os.makedirs(args.output, exist_ok=True)
-    _write(sql_features(spark, args.sf_dir), args.output, "sql_features")
+    _write(feature_table(spark, args.sf_dir), args.output, "sql_features")
     _write(features_rollup(spark, args.sf_dir), args.output, "features_rollup")
     return 0
 

@@ -10,19 +10,22 @@ Three kinds of cache, each with one key and one invalidation rule:
   - ``.corpus_cache`` — the queries/operators/fragments corpus tables;
   - ``.profiles_cache`` — the rendered profile log lines;
   - ``.ingest_cache`` — the parsed (materialized) ingest tables;
-  - ``.features_cache`` — the m0 feature table KMeans fits read;
+  - ``.features_cache`` — q1's statement-feature table, the one parse of
+    every SQL statement that q3-q6, m0 and the KMeans fits read;
   - ``.export_cache`` — sink outputs (snk1-snk7), overwritten by every
     run and never stamped: they are results, not inputs.
 
   The first four are deterministic functions of (fixture parquet,
-  generator source) and are invalidated by the source fingerprint:
-  ``build_once`` writes a ``_FINGERPRINT`` stamp (an md5 over every source
-  module whose logic shapes cache content) and rebuilds whenever the
-  stamp differs, so editing the renderer/parser/corpus SQL can never leave
-  a silently-stale cache. Fixture parquet is immutable test data, so it is
-  not part of the fingerprint. The sf0.001/sf0.01 copies are committed so
-  a cold checkout starts warm (first-touch materialization, not query
-  execution, was the biggest cold-start cost).
+  generator source) and are invalidated by their kind's source
+  fingerprint: ``build_once(kind, …)`` writes a ``_FINGERPRINT`` stamp
+  (an md5 over ``_SOURCES[kind]``, every source module whose logic shapes
+  that kind's content, upstream kinds' included) and rebuilds whenever
+  the stamp differs, so editing the renderer/parser/corpus SQL can never
+  leave a silently-stale cache, while editing the feature queries leaves
+  the corpus/profiles/ingest caches alone. Fixture parquet is immutable
+  test data, so it is not part of the fingerprint. The sf0.001/sf0.01
+  copies are committed so a cold checkout starts warm (first-touch
+  materialization, not query execution, was the biggest cold-start cost).
 - **Scan cache** — ``.scan_cache`` (``io.scan_cache_dir``) is keyed by the
   fixture file's content signature, file-locked while building and pruned
   of superseded versions; that protocol lives in ``io``.
@@ -45,19 +48,18 @@ import os
 _PKG = os.path.dirname(os.path.abspath(__file__))
 _REPO = os.path.dirname(_PKG)
 
-# every source file whose logic shapes the content of ANY derived cache;
-# one shared fingerprint keeps the invalidation story simple (a corpus
-# change invalidates downstream ingest/features anyway — they derive)
-_SOURCES = (
-    "corpus/corpus_sql.py",
-    "corpus/builder.py",
-    "sources/profile_render.py",
-    "sources/profiles.py",
-    "sources/thrift_compact.py",
-    "sql_introspect/parser.py",
-    "ml/clustering.py",
-    "catalog.py",
-)
+# per cache kind, every source file whose logic shapes its content; each
+# kind lists its upstream kind's sources first (it derives from them)
+_CORPUS = ("corpus/corpus_sql.py", "corpus/builder.py", "catalog.py")
+_PROFILES = _CORPUS + ("sources/profile_render.py", "sources/thrift_compact.py")
+_INGEST = _PROFILES + ("sources/profiles.py",)
+_SOURCES = {
+    "corpus": _CORPUS,
+    "profiles": _PROFILES,
+    "ingest": _INGEST,
+    "features": _INGEST + ("sql_introspect/parser.py",
+                           "sql_introspect/queries.py"),
+}
 
 # underscore prefix: Spark's file listing skips "_"-prefixed files, so the
 # stamp can live inside a parquet/text dataset directory without being
@@ -65,9 +67,9 @@ _SOURCES = (
 _STAMP = "_FINGERPRINT"
 
 
-def fingerprint() -> str:
+def fingerprint(kind: str) -> str:
     h = hashlib.md5()
-    for rel in _SOURCES:
+    for rel in _SOURCES[kind]:
         with open(os.path.join(_PKG, rel), "rb") as f:
             h.update(f.read())
     return h.hexdigest()
@@ -79,32 +81,26 @@ def cache_dir(kind: str, sf_dir: str, *parts: str) -> str:
                         os.path.basename(os.path.normpath(sf_dir)), *parts)
 
 
-def is_valid(root: str, *subdirs: str) -> bool:
+def is_valid(kind: str, root: str, *subdirs: str) -> bool:
     """True iff every _SUCCESS marker exists under ``root`` (or its
-    ``subdirs``) and the stamp matches the current source fingerprint."""
-    marks = (
-        [os.path.join(root, s, "_SUCCESS") for s in subdirs]
-        if subdirs
-        else [os.path.join(root, "_SUCCESS")]
-    )
-    if not all(os.path.exists(m) for m in marks):
+    ``subdirs``) and the stamp matches ``kind``'s source fingerprint."""
+    marks = [os.path.join(root, s, "_SUCCESS") for s in subdirs or ("",)]
+    stamp = os.path.join(root, _STAMP)
+    if not all(os.path.exists(p) for p in (*marks, stamp)):
         return False
-    stamp_path = os.path.join(root, _STAMP)
-    if not os.path.exists(stamp_path):
-        return False
-    with open(stamp_path) as f:
-        return f.read().strip() == fingerprint()
+    with open(stamp) as f:
+        return f.read().strip() == fingerprint(kind)
 
 
-def build_once(root: str, build, *subdirs: str) -> str:
+def build_once(kind: str, root: str, build, *subdirs: str) -> str:
     """Return ``root``, first running the zero-arg ``build`` (which writes
     the dataset(s) there) and stamping the result unless ``root`` is
-    already valid for the current source fingerprint."""
-    if not is_valid(root, *subdirs):
+    already valid for ``kind``'s source fingerprint."""
+    if not is_valid(kind, root, *subdirs):
         build()
         os.makedirs(root, exist_ok=True)
         with open(os.path.join(root, _STAMP), "w") as f:
-            f.write(fingerprint())
+            f.write(fingerprint(kind))
     return root
 
 

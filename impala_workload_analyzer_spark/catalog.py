@@ -24,6 +24,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .cache_util import build_once, cache_dir
+
 N_BUCKETS = 32
 
 
@@ -59,3 +61,14 @@ def read_bucketed(spark: SparkSession, path: str, table: str,
             f"LOCATION '{path}'"
         )
     return spark.table(table)
+
+
+def land(spark: SparkSession, kind: str, sf_dir: str, which: str,
+         build) -> DataFrame:
+    """The frame ``build()`` returns, landed once per sf_dir as the
+    bucketed table ``cache_dir(kind, sf_dir, which)`` (rebuilt when
+    ``kind``'s source fingerprint moves) and read back bucketed."""
+    path = cache_dir(kind, sf_dir, which)
+    table = _table_name(kind, sf_dir, which)
+    build_once(kind, path, lambda: write_bucketed(build(), path, table))
+    return read_bucketed(spark, path, table)

@@ -51,7 +51,7 @@ def ensure_corpus(spark: SparkSession, sf_dir: str) -> str:
             write_bucketed(derive(spark, sf_dir), os.path.join(out, name),
                            _table_name("corpus", sf_dir, name))
 
-    return build_once(out, build, "queries", "operators", "fragments")
+    return build_once("corpus", out, build, "queries", "operators", "fragments")
 
 
 def _derive_queries(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,9 +4,11 @@
 Feature vector (F13, ``clustering.py:20-61``): 10 derived numerics per
 SELECT/UNION statement — table count, subquery totals and depth,
 group/order/limit counts, and the summed predicate / function / select-expr
-families. Computed here from the SAME mini-parser the enrichment pass uses
-(``sql_introspect``), joined with the ingested queries table — the full EP1
--> EP2 -> EP3 lifecycle.
+families. m0 computes them as a Spark projection over q1's landed
+statement-feature store (``sql_introspect.queries.feature_table``: each
+feature is a BIGINT sum of q1's counter columns), joined with the ingested
+queries table's table count — the full EP1 -> EP2 -> EP3 lifecycle, with
+every statement parsed once, by q1. m2/m3/m3b read m0.
 
 M1 standardization: ``StandardScaler(withMean=True, withStd=True)``
 (``clustering.py:65``). M2 elbow sweep: WCSS from ``summary.trainingCost``;
@@ -30,105 +32,80 @@ sizes sum to n, per-point nearest-centroid invariant, Lloyd fixed-point
 centroid == assigned-mean identity), each asserted literally TRUE by a
 DuckDB oracle; the feature extraction itself is fully oracle-checked (m0).
 
-Scale: feature extraction is a stateless projection; KMeans is
-pyspark.ml's distributed Lloyd iterations — both shuffle-light. The elbow
-loop caches the assembled vectors once.
+Scale: m0 is a column projection plus a join of two tables bucketed on
+query_id (no exchange); KMeans is pyspark.ml's distributed Lloyd
+iterations — both shuffle-light. The elbow loop caches the assembled
+vectors once.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cache_util import build_once, cache_dir, session_memo
+from ..cache_util import session_memo
 from ..corpus.corpus_sql import with_corpus
 from ..sources.profiles import materialized_table
-from ..sql_introspect.parser import extract_sql_features
+from ..sql_introspect.queries import MAP_COLUMNS, feature_table
 
-_FEATURES = (
-    "num_tables", "num_subqueries", "max_depth_subqueries",
-    "num_group_by_columns", "num_order_by_columns", "num_limits",
-    "num_predicates", "num_where_fn_exprs", "num_select_exprs",
-    "num_select_predicates",
-)
+# The nine parsed features (clustering.py:20-61) as sums of q1's counter
+# columns; a QueryStats map key stands for every column q1 flattened it into.
+_DERIVED = {
+    "num_subqueries": (
+        "num_from_subqueries", "num_where_subqueries", "num_with_subqueries"),
+    "max_depth_subqueries": ("max_depth_subqueries",),
+    "num_group_by_columns": ("num_group_by_columns",),
+    "num_order_by_columns": ("num_order_by_columns",),
+    "num_limits": ("num_limits",),
+    "num_predicates": (
+        "num_where_in_predicates", "num_where_between_predicates",
+        "num_where_exists_predicates", "num_where_is_null_predicates",
+        "num_where_binary_predicates", "num_where_like_predicates",
+        "num_having_binary_predicates", "num_using_columns",
+        "num_on_binary_predicates", "num_on_between_predicates"),
+    "num_where_fn_exprs": (
+        "num_where_function_call_exprs", "num_where_case_exprs",
+        "num_where_arithmetic_exprs", "num_where_cast_exprs",
+        "num_where_timestamp_arithmetic_exprs",
+        "num_having_function_call_exprs", "num_on_function_call_exprs"),
+    "num_select_exprs": (
+        "num_select_case_exprs", "num_select_arithmetic_exprs",
+        "num_select_cast_exprs", "num_select_function_call_exprs",
+        "num_select_analytic_exprs"),
+    "num_select_predicates": (
+        "num_select_binary_predicates", "num_select_is_null_predicates"),
+}
 
-_SCHEMA = T.StructType(
-    [T.StructField("query_id", T.StringType())]
-    + [T.StructField(f, T.LongType()) for f in _FEATURES[1:]]
-)
+_FEATURES = ("num_tables", *_DERIVED)
+
+
+def _summed(keys: tuple[str, ...]):
+    return reduce(lambda a, b: a + b, [
+        F.col(c) for k in keys for c in MAP_COLUMNS.get(k, (k,))])
 
 
 def cluster_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """m0 — the 10-dim feature vector per SELECT/UNION query
-    (clustering.py:20-61), as columns."""
-    # repartition: parse-per-row CPU cost, not byte size, sets the right
-    # parallelism here (AQE would coalesce the small shuffle to 1 partition)
-    q = (
-        materialized_table(spark, sf_dir, "queries")
-        .select("query_id", "sql_stmt", "num_tables")
-        .repartition(spark.sparkContext.defaultParallelism)
+    (clustering.py:20-61), as columns: BIGINT sums over the landed
+    statement-feature store, joined with the ingested num_tables."""
+    feats = (
+        feature_table(spark, sf_dir)
+        # P2: sql.type $in filter (clustering.py:14-16)
+        .filter(F.col("stmt_type").isin("SelectStmt", "UnionStmt"))
+        .select("query_id",
+                *[_summed(keys).alias(f) for f, keys in _DERIVED.items()])
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for qid, stmt in zip(pdf["query_id"], pdf["sql_stmt"]):
-                feats = extract_sql_features(stmt)
-                if feats is None or feats["type"] not in ("SelectStmt", "UnionStmt"):
-                    continue  # P2: sql.type $in filter (clustering.py:14-16)
-                s = feats["stats"]
-                rows.append((
-                    qid,
-                    s["num_from_subqueries"] + s["num_where_subqueries"]
-                    + s["num_with_subqueries"],
-                    s["max_depth_subqueries"],
-                    s["num_group_by_columns"],
-                    s["num_order_by_columns"],
-                    s["num_limits"],
-                    s["num_where_in_predicates"] + s["num_where_between_predicates"]
-                    + s["num_where_exists_predicates"] + s["num_where_is_null_predicates"]
-                    + sum(s["num_where_binary_predicates"].values())
-                    + sum(s["num_where_like_predicates"].values())
-                    + sum(s["num_having_binary_predicates"].values())
-                    + s["num_using_columns"]
-                    + sum(s["num_on_binary_predicates"].values())
-                    + s["num_on_between_predicates"],
-                    s["num_where_function_call_exprs"] + s["num_where_case_exprs"]
-                    + s["num_where_arithmetic_exprs"] + s["num_where_cast_exprs"]
-                    + s["num_where_timestamp_arithmetic_exprs"]
-                    + s["num_having_function_call_exprs"]
-                    + s["num_on_function_call_exprs"],
-                    s["num_select_case_exprs"] + s["num_select_arithmetic_exprs"]
-                    + s["num_select_cast_exprs"] + s["num_select_function_call_exprs"]
-                    + s["num_select_analytic_exprs"],
-                    sum(s["num_select_binary_predicates"].values())
-                    + s["num_select_is_null_predicates"],
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in _SCHEMA.fields])
-
-    sql_feats = q.mapInPandas(run, schema=_SCHEMA)
-    return q.select("query_id", "num_tables").join(sql_feats, "query_id")
-
-
-def _ensure_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the m0 feature table once per sf_dir (the feature-store
-    pattern): m2's elbow sweep and m3's final fit both consume it, so the
-    SQL parse of ~15k statements runs once instead of per ML query. m0
-    itself always runs the live pipeline — it is the oracle-checked op."""
-    path = cache_dir("features", sf_dir, "features")
-    build_once(path, lambda: cluster_features(spark, sf_dir)
-               .write.mode("overwrite").parquet(path))
-    return spark.read.parquet(path)
+    q = materialized_table(spark, sf_dir, "queries").select("query_id", "num_tables")
+    return q.join(feats, "query_id")
 
 
 def _assembled(spark: SparkSession, sf_dir: str):
     from pyspark.ml.feature import StandardScaler, VectorAssembler  # noqa: PLC0415
 
-    df = _ensure_features(spark, sf_dir)
+    df = cluster_features(spark, sf_dir)
     # Canonical layout before the fit: k-means|| initialization samples
     # depend on partition boundaries and in-partition row order, so a
     # seed-pinned fit is only reproducible across environments (local[4]
@@ -248,7 +225,7 @@ def kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     a boolean FALSE and hash-mismatches."""
     rows = _elbow_curve(spark, sf_dir)
     stats = (
-        _ensure_features(spark, sf_dir)
+        cluster_features(spark, sf_dir)
         .agg(
             F.count("*").alias("n"),
             *[

@@ -19,9 +19,6 @@ from pyspark.sql import functions as F
 
 from ..corpus import IDIV, corpus_fragments, corpus_operators, with_corpus
 
-# keys excluded by the reference check (profile_analyzer.py:418-421)
-SKIP_KEYS = ("InactiveTotalTime", "AsyncTotalTime")
-
 
 def _floor_mean(map_col: str, key: str):
     """py2 ``sum(values) / len(values)`` over a per-instance counter list

@@ -329,7 +329,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shingle frame persisted once per (session, corpus) — the
-    feature-store pattern (_colocated_nodes, _ensure_features) applied
+    feature-store pattern (_colocated_nodes, feature_table) applied
     to the dedup family's shared intermediate. The multi-tier
     instruments (dd17 runs dd2+dd3's pipelines in one report, dd21 runs
     three band configs against one truth set) otherwise re-explode the

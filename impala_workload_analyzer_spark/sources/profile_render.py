@@ -347,7 +347,7 @@ def ensure_profiles(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per sf_dir) the corpus into tag-partitioned profile log
     files; returns the log directory."""
     path = profiles_path(sf_dir)
-    return build_once(path, lambda: _render_profiles(spark, sf_dir, path))
+    return build_once("profiles", path, lambda: _render_profiles(spark, sf_dir, path))
 
 
 def _render_profiles(spark: SparkSession, sf_dir: str, path: str) -> None:

@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cache_util import build_once, cache_dir
 from ..corpus.corpus_sql import with_corpus
 from .profile_render import ensure_profiles
 from .thrift_compact import TRuntimeProfileTree
@@ -624,6 +623,19 @@ def _parse_table(spark: SparkSession, sf_dir: str, which: str,
     return out
 
 
+def _parse_one(blob: str, tag: str):
+    """Decode+parse one log line: ``(query, ops, frags)``, "rejected" by
+    the S3 status gate, or "bad" (corrupt base64/zlib/thrift). A 100 TB
+    ingest cannot abort on one bad blob: undecodable lines are quarantined
+    (the badRecordsPath pattern), never raised. Every table and ing5 go
+    through this routine, so ing5's ``n_bad`` is what the tables drop."""
+    try:
+        query, ops, frags = parse_profile(_decode(blob), tag)
+    except Exception:  # noqa: BLE001 — quarantine, don't abort
+        return "bad"
+    return "rejected" if query is None else (query, ops, frags)
+
+
 def _parse_rows(which: str, blobs, tags) -> list[tuple]:
     """Decode+parse one batch of (blob, tag) pairs into output rows.
     Kept separate from the pandas framing in ``batch_parser`` so worker
@@ -631,9 +643,10 @@ def _parse_rows(which: str, blobs, tags) -> list[tuple]:
     the parse core without touching the emission format."""
     rows: list[tuple] = []
     for blob, tag in zip(blobs, tags):
-        query, ops, frags = parse_profile(_decode(blob), tag)
-        if query is None:
+        parsed = _parse_one(blob, tag)
+        if isinstance(parsed, str):
             continue
+        query, ops, frags = parsed
         if which == "operators":
             rows.extend(_op_row(tag, o) for o in ops)
         elif which == "fragments":
@@ -827,14 +840,11 @@ def materialized_table(spark: SparkSession, sf_dir: str, which: str) -> DataFram
     the materialized Mongo collections, not re-parsed profiles. The ing1-3
     driver queries still run the real parse; this is the sink they would
     write (S8)."""
-    from ..catalog import _table_name, read_bucketed, write_bucketed  # noqa: PLC0415
+    from ..catalog import land  # noqa: PLC0415
 
-    path = cache_dir("ingest", sf_dir, which)
-    table = _table_name("ingest", sf_dir, which)
     fn = {"operators": parsed_operators, "fragments": parsed_fragments,
           "queries": parsed_queries}[which]
-    build_once(path, lambda: write_bucketed(fn(spark, sf_dir), path, table))
-    return read_bucketed(spark, path, table)
+    return land(spark, "ingest", sf_dir, which, lambda: fn(spark, sf_dir))
 
 
 def delete_by_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,9 +873,8 @@ def ingest_health(spark: SparkSession, sf_dir: str,
     """ing5 — ingest health / quarantine accounting: per tag, how many log
     lines arrived, parsed into query rows, were rejected by the status
     gate (S3: non-FINISHED/OK, unknown types, missing ExecSummary), or
-    failed to decode at all (corrupt base64/zlib/thrift). A 100 TB ingest
-    cannot abort on one bad blob — undecodable lines are counted and
-    skipped (the badRecordsPath pattern), never raised.
+    failed to decode at all (corrupt base64/zlib/thrift) — counted by the
+    same ``_parse_one`` the tables skip those lines with.
 
     Scale: the counters aggregate per Arrow batch inside the scan (a few
     rows per task), then one tiny groupBy(tag) — the profile stream is
@@ -878,15 +887,8 @@ def ingest_health(spark: SparkSession, sf_dir: str,
             for blob, tg in zip(pdf["blob"].tolist(), pdf["tag"].tolist()):
                 c = counts.setdefault(tg, [0, 0, 0, 0])
                 c[0] += 1
-                try:
-                    query, _ops, _frags = parse_profile(_decode(blob), tg)
-                except Exception:  # noqa: BLE001 — quarantine, don't abort
-                    c[3] += 1
-                    continue
-                if query is None:
-                    c[2] += 1
-                else:
-                    c[1] += 1
+                outcome = _parse_one(blob, tg)
+                c[3 if outcome == "bad" else 2 if outcome == "rejected" else 1] += 1
             yield pd.DataFrame(
                 [(t, *c) for t, c in counts.items()],
                 columns=[f.name for f in HEALTH_SCHEMA.fields],

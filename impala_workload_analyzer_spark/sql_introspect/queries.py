@@ -1,10 +1,15 @@
 """Driver-contract queries for the SQL-introspection layer (Q1-Q6).
 
-``q1_sql_features`` runs the full EP2 pipeline (SURVEY.md §3): ingest the
-profile logs (ing3), then enrich each statement with the feature struct via
-``extract_sql_features`` inside Arrow-batched ``mapInPandas`` — the AST
-lives only inside the UDF, exactly as the reference's Impala frontend AST
-lives only inside the Java pass (QueryAnalyzer.java:333-349).
+``q1_sql_features`` runs the full EP2 pipeline (SURVEY.md §3): read the
+ingested queries table, then enrich each statement with its feature
+counters via ``extract_sql_features`` inside Arrow-batched
+``mapInPandas`` — the AST lives only inside the UDF, exactly as the
+reference's Impala frontend AST lives only inside the Java pass
+(QueryAnalyzer.java:333-349). That is the one place a statement is
+parsed: ``feature_table`` lands q1's output once per corpus (the
+statement-feature store, like the reference writing the features back
+into ``queries``), and q3-q6 here, m0 and the KMeans fits
+(``ml.clustering``) are plain DataFrames over it.
 
 The oracle re-derives the expected features per corpus statement template
 in SQL. The deep per-clause parity (subquery merges, operator-keyed maps,
@@ -13,7 +18,7 @@ by the table-driven unit tests in tests/test_sql_introspect.py — the
 corpus templates exercise the end-to-end plumbing.
 
 Scale: enrichment is a stateless projection over the queries table — no
-shuffle; at 100 TB it fuses into the ingest scan.
+shuffle; at 100 TB it fuses into the ingest scan and lands beside it.
 """
 
 from __future__ import annotations
@@ -69,11 +74,14 @@ _MAP_COUNTERS = (
     ("num_where_like_predicates", "num_where_like", _LIKE_OPS),
 )
 
+# each operator-keyed map's flattened columns, by its QueryStats key
+MAP_COLUMNS = {
+    key: [f"{prefix}_{_OP_NAMES[op]}" for op in ops]
+    for key, prefix, ops in _MAP_COUNTERS
+}
+
 COUNTER_COLUMNS = list(_SCALAR_COUNTERS) + [
-    f"{prefix}_{_OP_NAMES[op]}"
-    for _, prefix, ops in _MAP_COUNTERS
-    for op in ops
-]
+    c for cols in MAP_COLUMNS.values() for c in cols]
 
 FEATURES_SCHEMA = T.StructType(
     [T.StructField("query_id", _S), T.StructField("stmt_type", _S)]
@@ -108,113 +116,36 @@ def sql_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for qid, stmt in zip(pdf["query_id"], pdf["sql_stmt"]):
-                feats = extract_sql_features(stmt)
-                if feats is None:
-                    rows.append((qid, "UnparsedStmt") + (None,) * (n + 2))
-                    continue
-                s = feats["stats"]
-                if s is None:
-                    rows.append((qid, feats["type"]) + (None,) * n
-                                + (feats["overwrite"], feats["parameterized_stmt"]))
-                    continue
-                rows.append((qid, feats["type"]) + _flat_counters(s)
-                            + (feats["overwrite"], feats["parameterized_stmt"]))
+                # an unparseable statement keeps its row, all NULL features
+                feats = extract_sql_features(stmt) or {"type": "UnparsedStmt"}
+                s = feats.get("stats")
+                rows.append((qid, feats["type"])
+                            + ((None,) * n if s is None else _flat_counters(s))
+                            + (feats.get("overwrite"), feats.get("parameterized_stmt")))
             yield pd.DataFrame(rows, columns=[f.name for f in FEATURES_SCHEMA.fields])
 
     return queries.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
-# Union of the columns the shared frame's consumers actually read (q3's
-# rollup, q4's template runtime, q5's lint, q6's novelty census). The
-# persisted frame carries ONLY these (r16 optimization, guide §2.3/§5):
-# the other ~60 BIGINT counters crossed Arrow, were cached columnar, and
-# were drained by every consumer without ever being read. q1 (the full
-# ~75-column contract surface) keeps its own live plan and does NOT read
-# this frame. Adding a consumer that needs another counter = add the
-# column here (an absent column fails at plan time, never silently).
-_SHARED_COLUMNS = (
-    "query_id", "stmt_type", "parameterized_stmt",
-    "num_output_columns", "num_limits", "num_where_binary_eq",
-    "num_where_subqueries", "num_select_analytic_exprs",
-    "num_where_like_like", "num_where_like_rlike", "num_where_like_regexp",
-)
+def feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The statement-feature store: q1's output landed once per corpus
+    (``.features_cache/<sf>/sql_features``, bucketed on query_id), as the
+    reference writes the parsed features back into ``queries``
+    (QueryAnalyzer.java:333-349). q3-q6, m0 and the KMeans fits read it,
+    each only its own columns; q1 stays the one live, oracle-checked parse."""
+    from ..catalog import land  # noqa: PLC0415
 
-_SHARED_SCHEMA = T.StructType(
-    [T.StructField("query_id", _S), T.StructField("stmt_type", _S),
-     T.StructField("parameterized_stmt", _S)]
-    + [T.StructField(c, _L) for c in _SHARED_COLUMNS[3:]]
-)
-
-
-def _sql_features_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The consumer-facing subset of q1's parse, emitted directly from
-    the Python side: the SAME ``extract_sql_features`` AST walk per
-    statement (values identical to ``sql_features(...)​.select(cols)`` —
-    pinned by tests/test_sql_introspect.py), but only the 8 counters the
-    consumers read cross the Arrow boundary instead of all 71
-    (guide §4.1: you control how many columns cross)."""
-    queries = (
-        materialized_table(spark, sf_dir, "queries")
-        .select("query_id", "sql_stmt")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in _SHARED_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for qid, stmt in zip(pdf["query_id"], pdf["sql_stmt"]):
-                feats = extract_sql_features(stmt)
-                if feats is None:
-                    rows.append((qid, "UnparsedStmt", None) + (None,) * 8)
-                    continue
-                s = feats["stats"]
-                if s is None:
-                    rows.append((qid, feats["type"], feats["parameterized_stmt"])
-                                + (None,) * 8)
-                    continue
-                like = s["num_where_like_predicates"]
-                rows.append((
-                    qid, feats["type"], feats["parameterized_stmt"],
-                    s["num_output_columns"], s["num_limits"],
-                    s["num_where_binary_predicates"]["="],
-                    s["num_where_subqueries"], s["num_select_analytic_exprs"],
-                    like["LIKE"], like["RLIKE"], like["REGEXP"],
-                ))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return queries.mapInPandas(run, schema=_SHARED_SCHEMA)
-
-
-def _sql_features_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q1's parsed feature frame persisted once per (session, corpus) —
-    the feature-store pattern (_shared_shingles / _exact_topk_shared)
-    applied to the introspection family's shared intermediate. The
-    parse is CPU-heavy per row (a full AST walk per statement inside
-    mapInPandas) and FOUR consumers re-ran it per query (q3's rollup,
-    q4's template runtime, q5's lint, q6's novelty census), while the
-    output is one narrow row per statement — trivially persistable.
-    Production shape: the enriched features are written back to the
-    store once per ingest (S9) and every report joins them. q1 itself
-    keeps its live, contract-pinned plan; correctness never depends on
-    the cache (a cold call rebuilds). Keyed by applicationId via
-    cache_util.session_persisted (ADVICE r8). Since r16 the persisted
-    projection is ``_SHARED_COLUMNS`` only (the verdict's top item: ~2 s
-    of the 3.3 s cold build was materializing counters no consumer
-    read); ``_sql_features_narrow`` keeps the identical parse."""
-    from ..cache_util import session_persisted  # noqa: PLC0415
-
-    return session_persisted(
-        spark, sf_dir, "sql_features",
-        lambda: _sql_features_narrow(spark, sf_dir),
-    )
+    # shuffle the narrow parse output by the bucket key first (as the ingest
+    # dedup does), or every parse task writes one small file per bucket
+    return land(spark, "features", sf_dir, "sql_features",
+                lambda: sql_features(spark, sf_dir).repartition("query_id"))
 
 
 def features_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q3_features_rollup — the enriched corpus as DATA (A15-shape): counts
     and feature sums per statement class, sorted by count desc."""
     return (
-        _sql_features_shared(spark, sf_dir)
+        feature_table(spark, sf_dir)
         .groupBy("stmt_type")
         .agg(
             F.count("*").alias("n_queries"),
@@ -234,13 +165,13 @@ def template_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     capacity review starts from. Statements with no template (DDL,
     inserts, parse failures) are out of scope by definition.
 
-    Scale: the parse already ran per-row (q1's stateless mapInPandas
-    projection); this adds ONE shuffle keyed by template string —
+    Scale: the parse already ran once, when q1's output was landed
+    (``feature_table``); this adds ONE shuffle keyed by template string —
     cardinality = distinct templates, orders of magnitude below
     statements — after a query_id-keyed join whose both sides came out
     of the same ingest. All runtime arithmetic is exact BIGINT (floor
     mean via DIV), so partial-agg order can never move a value."""
-    feats = _sql_features_shared(spark, sf_dir).select(
+    feats = feature_table(spark, sf_dir).select(
         "query_id", "parameterized_stmt")
     q = materialized_table(spark, sf_dir, "queries").select("query_id", "runtime")
     return (
@@ -274,9 +205,9 @@ def sql_antipatterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     instantiation flags the template) — integer 0/1 max cast to boolean
     identically in both engines; runtime sums are exact BIGINT.
 
-    Scale: identical shape to q4 — the per-row parse already ran; this
+    Scale: identical shape to q4 — it reads the landed feature table; this
     adds one template-keyed shuffle over template-cardinality rows."""
-    feats = _sql_features_shared(spark, sf_dir).select(
+    feats = feature_table(spark, sf_dir).select(
         "query_id",
         "parameterized_stmt",
         "num_select_analytic_exprs",
@@ -458,15 +389,15 @@ def template_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — and every published figure is a count or an IDIV floor
     ppm, identical on both engines.
 
-    Scale: the parse already ran per-row (q1's stateless mapInPandas
-    projection); this adds one shuffle keyed by the template string
+    Scale: the parse already ran once, when q1's output was landed
+    (``feature_table``); this adds one shuffle keyed by the template string
     (cardinality = distinct templates) for the first-seen aggregate
     and one keyed by bucket (cardinality = observation buckets) for the
     census — both orders of magnitude below statements, with map-side
     partials throughout."""
     from ..corpus.corpus_sql import IDIV  # noqa: PLC0415
 
-    feats = _sql_features_shared(spark, sf_dir).select(
+    feats = feature_table(spark, sf_dir).select(
         "query_id", "parameterized_stmt")
     q = materialized_table(spark, sf_dir, "queries").select(
         "query_id", "start_time"

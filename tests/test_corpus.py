@@ -8,7 +8,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from impala_workload_analyzer_spark.cache_util import cache_dir, fingerprint
+from impala_workload_analyzer_spark.cache_util import _SOURCES, cache_dir, fingerprint
 from impala_workload_analyzer_spark.corpus import (
     corpus_fragments,
     corpus_operators,
@@ -78,7 +78,7 @@ def test_cache_dir_keeps_every_derived_data_path():
         ("corpus", (), ".corpus_cache/sf0.01"),
         ("profiles", (), ".profiles_cache/sf0.01"),
         ("ingest", ("fragments",), ".ingest_cache/sf0.01/fragments"),
-        ("features", ("features",), ".features_cache/sf0.01/features"),
+        ("features", ("sql_features",), ".features_cache/sf0.01/sql_features"),
         ("export", ("ann_index",), ".export_cache/sf0.01/ann_index"),
     ):
         for sf_dir in ("data/sf0.01", "data/sf0.01/", "sf0.01"):
@@ -86,13 +86,26 @@ def test_cache_dir_keeps_every_derived_data_path():
 
 
 def test_committed_cache_stamps_match_source_fingerprint():
-    """The committed caches (sf0.001, sf0.01) must carry the current source
-    fingerprint: a stale stamp is silently rebuilt on first touch in every
-    checkout, so a change to a fingerprinted source must regenerate the
-    committed caches with it."""
+    """The committed caches (sf0.001, sf0.01) must carry their kind's
+    current source fingerprint: a stale stamp is silently rebuilt on first
+    touch in every checkout, so a change to a fingerprinted source must
+    regenerate the committed caches of every kind that lists it."""
     stamps = glob.glob(os.path.join(_REPO, ".*_cache", "sf0.0*1", "**", "_FINGERPRINT"),
                        recursive=True)
-    assert stamps
-    want = fingerprint()
-    stale = [p for p in stamps if Path(p).read_text().strip() != want]
+    kind = {p: os.path.relpath(p, _REPO).split(os.sep)[0][1:-len("_cache")]
+            for p in stamps}  # ".<kind>_cache/…"
+    assert set(kind.values()) == set(_SOURCES)
+    stale = [p for p in stamps if Path(p).read_text().strip() != fingerprint(kind[p])]
     assert not stale, stale
+
+
+def test_each_cache_kind_fingerprints_its_upstream_sources():
+    """A kind derives from its upstream kind, so an upstream source change
+    must invalidate it too; the statement-feature queries shape only the
+    features cache, so editing them leaves corpus/profiles/ingest alone."""
+    chain = ("corpus", "profiles", "ingest", "features")
+    assert set(_SOURCES) == set(chain)
+    for up, down in zip(chain, chain[1:]):
+        assert set(_SOURCES[up]) < set(_SOURCES[down]), (up, down)
+    assert [k for k in chain if "sql_introspect/queries.py" in _SOURCES[k]] \
+        == ["features"]

@@ -473,7 +473,8 @@ print(f"OK {n} {d}")
 def test_ingest_health_quarantines_corrupt_lines(spark, tmp_path):
     """ing5: undecodable blobs are counted as n_bad and skipped — the
     ingest never aborts on a corrupt line; status-gate rejects and good
-    parses are tallied separately."""
+    parses are tallied separately. The table ingest over the same
+    directory skips exactly those lines: it lands the good line's row."""
     import base64
     import zlib
 
@@ -498,6 +499,11 @@ def test_ingest_health_quarantines_corrupt_lines(spark, tmp_path):
     r = rows[0]
     assert (r["tag"], r["n_lines"], r["n_parsed"], r["n_rejected"], r["n_bad"]) \
         == ("q", 5, 1, 1, 3)
+    landed = P.parsed_queries(
+        spark, sf_dir="", input_dir=str(tmp_path), tag="q"
+    ).collect()
+    query, _ops, _frags = P.parse_profile(_query_tree(), "q")
+    assert [tuple(r) for r in landed] == [P._query_row(query)]  # noqa: SLF001
 
 
 def test_normalize_event_ts_all_encodings(spark, tmp_path):

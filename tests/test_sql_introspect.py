@@ -347,22 +347,32 @@ def test_sql_antipatterns_matches_python(spark, sf_dir):
         assert g["like_filter"] == v["lk"]
 
 
-def test_narrow_shared_frame_equals_full_projection(spark, sf_dir):
-    """The r16 narrow shared frame (_sql_features_narrow) must be
-    value-identical to the full q1 parse projected to _SHARED_COLUMNS —
-    same AST walk, same NULL conventions for DDL/unparsed statements —
-    so q3-q6 reading the narrow frame can never drift from q1's
-    contract surface."""
+def test_feature_table_holds_exactly_q1_rows(spark, sf_dir):
+    """The landed statement-feature store is q1's output, row for row and
+    column for column — q3-q6 and m0 read it in place of a parse of their
+    own, so it can never drift from q1's contract surface."""
     from impala_workload_analyzer_spark.sql_introspect.queries import (
-        _SHARED_COLUMNS,
-        _sql_features_narrow,
+        feature_table,
         sql_features,
     )
 
-    narrow = _sql_features_narrow(spark, sf_dir)
-    assert [f.name for f in narrow.schema.fields] == list(_SHARED_COLUMNS)
-    full = sql_features(spark, sf_dir).select(*_SHARED_COLUMNS)
-    assert narrow.schema == full.schema
-    assert narrow.exceptAll(full).count() == 0
-    assert full.exceptAll(narrow).count() == 0
-    assert narrow.count() > 0
+    store, live = feature_table(spark, sf_dir), sql_features(spark, sf_dir)
+    assert store.schema == live.schema
+    assert store.count() > 0
+    assert store.exceptAll(live).count() == 0
+    assert live.exceptAll(store).count() == 0
+
+
+def test_feature_consumers_never_parse(spark, sf_dir):
+    """Only q1 parses statements: q3-q6 and m0 plan as reads of the landed
+    feature store, with no Python parse step in their physical plans."""
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    for name in ("q3_features_rollup", "q4_template_runtime",
+                 "q5_sql_antipatterns", "q6_template_novelty",
+                 "m0_cluster_features"):
+        df = qs[name](spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted")
+        assert "MapInPandas" not in plan, (name, plan)

@@ -1,4 +1,4 @@
-"""Decade exponents for the five session-persisted shared builds.
+"""Decade exponents for the shared builds bench.py times as one_time_builds.
 
 SCALE.md's consumer rows (dd17, dd21, sim24, ...) measure WARM-marginal
 cost on top of the shared frames; bench.py publishes each build's cold
@@ -59,8 +59,11 @@ _TAGS = {
     "_int8_recall": "int8_recall",
     "_simhash_pairs": "simhash_pairs",
     "_ivfpq_ranked": "ivfpq_ranked",
-    "_sql_features": "sql_features",
 }
+
+# builds that read a table landed on disk rather than a session frame:
+# nothing to evict between reps (every rep times the same read)
+_LANDED = frozenset({"_sql_features"})
 
 # builds whose inputs the sf1-equivalent corpus does NOT replicate
 # (sf1_sweep widens documents/events/embeddings only): at "sf1" they
@@ -93,11 +96,12 @@ def main() -> int:
                 continue  # unselected builds still run: downstream needs them warm
             best = None
             for rep in range(2):
-                evicted = evict_session_frames(_TAGS[bname])
-                assert rep == 0 or evicted, (
-                    f"{bname}: no session frame under tag {_TAGS[bname]!r}"
-                    " — _TAGS is stale"
-                )
+                if bname not in _LANDED:
+                    evicted = evict_session_frames(_TAGS[bname])
+                    assert rep == 0 or evicted, (
+                        f"{bname}: no session frame under tag {_TAGS[bname]!r}"
+                        " — _TAGS is stale"
+                    )
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
