@@ -7,7 +7,8 @@ Three kinds of cache, each with one key and one invalidation rule:
   ``<repo>/.<kind>_cache/<basename(sf_dir)>/<parts…>``, keyed by the
   fixture directory's basename:
 
-  - ``.corpus_cache`` — the queries/operators/fragments corpus tables;
+  - ``.corpus_cache`` — the queries/operators/fragments corpus tables,
+    each stamped on its own, like the ingest and feature tables;
   - ``.profiles_cache`` — the rendered profile log lines;
   - ``.ingest_cache`` — the parsed (materialized) ingest tables;
   - ``.features_cache`` — q1's statement-feature table, the one parse of
@@ -18,14 +19,15 @@ Three kinds of cache, each with one key and one invalidation rule:
   The first four are deterministic functions of (fixture parquet,
   generator source) and are invalidated by their kind's source
   fingerprint: ``build_once(kind, …)`` writes a ``_FINGERPRINT`` stamp
-  (an md5 over ``_SOURCES[kind]``, every source module whose logic shapes
-  that kind's content, upstream kinds' included) and rebuilds whenever
-  the stamp differs, so editing the renderer/parser/corpus SQL can never
-  leave a silently-stale cache, while editing the feature queries leaves
-  the corpus/profiles/ingest caches alone. Fixture parquet is immutable
-  test data, so it is not part of the fingerprint. The sf0.001/sf0.01
-  copies are committed so a cold checkout starts warm (first-touch
-  materialization, not query execution, was the biggest cold-start cost).
+  into each dataset directory (an md5 over ``_SOURCES[kind]``, every
+  source module whose logic shapes that kind's content, upstream kinds'
+  included) and rebuilds whenever the stamp differs, so editing the
+  renderer/parser/corpus SQL can never leave a silently-stale cache,
+  while editing the feature queries leaves the corpus/profiles/ingest
+  caches alone. Fixture parquet is immutable test data, so it is not part
+  of the fingerprint. The sf0.001/sf0.01 copies are committed so a cold
+  checkout starts warm (first-touch materialization, not query
+  execution, was the biggest cold-start cost).
 - **Scan cache** — ``.scan_cache`` (``io.scan_cache_dir``) is keyed by the
   fixture file's content signature, file-locked while building and pruned
   of superseded versions; that protocol lives in ``io``.
@@ -81,22 +83,22 @@ def cache_dir(kind: str, sf_dir: str, *parts: str) -> str:
                         os.path.basename(os.path.normpath(sf_dir)), *parts)
 
 
-def is_valid(kind: str, root: str, *subdirs: str) -> bool:
-    """True iff every _SUCCESS marker exists under ``root`` (or its
-    ``subdirs``) and the stamp matches ``kind``'s source fingerprint."""
-    marks = [os.path.join(root, s, "_SUCCESS") for s in subdirs or ("",)]
+def is_valid(kind: str, root: str) -> bool:
+    """True iff ``root`` holds a _SUCCESS marker and a stamp matching
+    ``kind``'s source fingerprint."""
     stamp = os.path.join(root, _STAMP)
-    if not all(os.path.exists(p) for p in (*marks, stamp)):
+    if not (os.path.exists(os.path.join(root, "_SUCCESS"))
+            and os.path.exists(stamp)):
         return False
     with open(stamp) as f:
         return f.read().strip() == fingerprint(kind)
 
 
-def build_once(kind: str, root: str, build, *subdirs: str) -> str:
+def build_once(kind: str, root: str, build) -> str:
     """Return ``root``, first running the zero-arg ``build`` (which writes
-    the dataset(s) there) and stamping the result unless ``root`` is
+    the dataset there) and stamping the result unless ``root`` is
     already valid for ``kind``'s source fingerprint."""
-    if not is_valid(kind, root, *subdirs):
+    if not is_valid(kind, root):
         build()
         os.makedirs(root, exist_ok=True)
         with open(os.path.join(root, _STAMP), "w") as f:

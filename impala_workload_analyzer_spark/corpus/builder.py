@@ -8,10 +8,10 @@ consume these via ``element_at`` / higher-order functions exactly like the
 reference consumes its BSON maps, while the flat twin columns keep every
 analytic DuckDB-oracle-checkable.
 
-All three builders return lazy DataFrames derived from the ``orders``
-parquet — Catalyst pipelines the derivation into each analytic's plan, and
-at cluster scale the derivation is an embarrassingly parallel projection
-(no shuffle).
+All three tables are derived from the ``orders`` parquet and landed once
+per corpus through ``catalog.land`` (bucketed on query_id); analytics read
+the landed tables. At cluster scale the derivation is an embarrassingly
+parallel projection (no shuffle).
 """
 
 from __future__ import annotations
@@ -21,8 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache_util import build_once, cache_dir
-from ..catalog import _table_name, read_bucketed, write_bucketed
+from ..catalog import build_landed, land
 from .corpus_sql import with_corpus
 
 
@@ -31,8 +30,10 @@ def _orders_view(spark: SparkSession, sf_dir: str) -> None:
         .createOrReplaceTempView("orders")
 
 
-def ensure_corpus(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the three corpus tables as parquet, once per sf_dir.
+def ensure_corpus(spark: SparkSession, sf_dir: str) -> None:
+    """Materialize the three corpus tables as parquet, once per sf_dir
+    (each table stamped on its own), without registering them in the
+    session catalog — ``corpus_*`` do that on first read.
 
     This mirrors the reference architecture: ingest MATERIALIZES the
     collections (profile_analyzer.py:278-313), analytics query them. A
@@ -42,16 +43,10 @@ def ensure_corpus(spark: SparkSession, sf_dir: str) -> str:
     At cluster scale these writes are the ingest job's output, partitioned
     by tag/date.
     """
-    out = cache_dir("corpus", sf_dir)
-
-    def build() -> None:
-        for name, derive in (("queries", _derive_queries),
-                             ("operators", _derive_operators),
-                             ("fragments", _derive_fragments)):
-            write_bucketed(derive(spark, sf_dir), os.path.join(out, name),
-                           _table_name("corpus", sf_dir, name))
-
-    return build_once("corpus", out, build, "queries", "operators", "fragments")
+    for which, derive in (("queries", _derive_queries),
+                          ("operators", _derive_operators),
+                          ("fragments", _derive_fragments)):
+        build_landed("corpus", sf_dir, which, lambda d=derive: d(spark, sf_dir))
 
 
 def _derive_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,20 +132,17 @@ def _derive_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corpus_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized ``queries`` table (bucketed on query_id)."""
-    out = ensure_corpus(spark, sf_dir)
-    return read_bucketed(spark, os.path.join(out, "queries"),
-                         _table_name("corpus", sf_dir, "queries"))
+    return land(spark, "corpus", sf_dir, "queries",
+                lambda: _derive_queries(spark, sf_dir))
 
 
 def corpus_operators(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized ``operators`` table (bucketed on query_id)."""
-    out = ensure_corpus(spark, sf_dir)
-    return read_bucketed(spark, os.path.join(out, "operators"),
-                         _table_name("corpus", sf_dir, "operators"))
+    return land(spark, "corpus", sf_dir, "operators",
+                lambda: _derive_operators(spark, sf_dir))
 
 
 def corpus_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized ``fragments`` table (bucketed on query_id)."""
-    out = ensure_corpus(spark, sf_dir)
-    return read_bucketed(spark, os.path.join(out, "fragments"),
-                         _table_name("corpus", sf_dir, "fragments"))
+    return land(spark, "corpus", sf_dir, "fragments",
+                lambda: _derive_fragments(spark, sf_dir))

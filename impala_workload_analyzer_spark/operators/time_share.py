@@ -17,18 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..corpus import corpus_fragments, corpus_operators, corpus_queries, with_corpus
-from .workload_stats import _FQ, STMT_TYPES
+from ..corpus import corpus_fragments, corpus_operators, with_corpus
+from .workload_stats import _FQ, _filtered_queries
 
 
 def _per_query_name_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union of real per-operator-name sums (A1) and the four synthetic
     rows per query, as (query_id, name, sum_time<double>)."""
-    q = (
-        corpus_queries(spark, sf_dir)
-        .filter((F.col("tag") == "tpch") & F.col("sql_type").isin(*STMT_TYPES))
-        .select("query_id", "plan_time", "fragment_start_time")
-    )
+    q = _filtered_queries(spark, sf_dir).select(
+        "query_id", "plan_time", "fragment_start_time")
     ops = corpus_operators(spark, sf_dir)
     frags = corpus_fragments(spark, sf_dir)
     real = (
@@ -78,11 +75,7 @@ def avg_time_pct_per_operator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 — mean over all queries of each name's per-query share, zero-
     filled (stats.py:356-367): sum(shares) / total query count."""
     shares = time_share_per_query(spark, sf_dir)
-    nq = (
-        corpus_queries(spark, sf_dir)
-        .filter((F.col("tag") == "tpch") & F.col("sql_type").isin(*STMT_TYPES))
-        .agg(F.count("*").alias("num_queries"))
-    )
+    nq = _filtered_queries(spark, sf_dir).agg(F.count("*").alias("num_queries"))
     return (
         shares.groupBy("name")
         .agg(F.sum("time_pct").alias("pct_sum"))

@@ -7,15 +7,15 @@ is the fragment with ``exchange_id NULL``.
 
 Spark-first re-expression: the edge set is ONE self-join plus one
 operators<->fragments join (J4); the downward closure (depth + path, which
-IS the ASCII render order) is computed by iterating a bounded number of
-joins — each iteration is a set-based step over ALL queries at once, not a
-per-node lookup. DuckDB oracles use WITH RECURSIVE over the same corpus:
-two very different engines, same fixpoint.
+IS the ASCII render order) is one co-located partition walk: the operators
+are shuffled once on query_id, so every plan tree lies in one partition,
+and ``_walk_trees`` rebuilds and walks each tree there in plain Python —
+one pass over ALL queries at once, never a per-node lookup. The walk
+follows pt1's edge set exactly; the DuckDB oracles run WITH RECURSIVE over
+that same edge set (``_EDGES``): two very different engines, same fixpoint.
 
-Scale: each iteration is a broadcast-ready equi-join keyed by
-(query_id, parent); plan depth is bounded (Impala plans are short trees),
-so the loop is O(depth) Spark jobs over the whole corpus — the classic
-'recursive CTE via iterative DataFrame' pattern.
+Scale: one shuffle keyed by query_id; a plan tree is tiny (Impala plans
+are short), so each partition's walk is linear in its operator rows.
 """
 
 from __future__ import annotations
@@ -73,7 +73,7 @@ _PAYLOAD_COLS = ("name", "avg_time")  # every plan analytic's payload
 
 
 def _colocated_nodes(spark: SparkSession, sf_dir: str,
-                     payload_col: str) -> DataFrame:
+                     *payload: str) -> DataFrame:
     """Operators + their fragment's exchange_id, co-located per query.
 
     Co-location safety: against the bucketed corpus tables the planner
@@ -91,7 +91,7 @@ def _colocated_nodes(spark: SparkSession, sf_dir: str,
     the cluster (``defaultParallelism``, not a hard-coded bucket count).
     ``test_plan_contracts`` guards row conservation.
 
-    Shared across pt2/pt3/pt5: the scan + broadcast join + co-location
+    Shared across pt2/pt3/pt5/pt8/pt9: the scan + broadcast join + co-location
     shuffle is ~70% of a single pt query's wall time and is byte-identical
     for every plan analytic, so ONE frame carrying every payload column is
     built per (session, corpus) and persisted (MEMORY_AND_DISK — spills,
@@ -113,41 +113,53 @@ def _colocated_nodes(spark: SparkSession, sf_dir: str,
 
     base = session_persisted(spark, sf_dir, "pt_nodes", build)
     return base.select(
-        "query_id", "id", "fragment_id", "parent_id", payload_col,
-        "exchange_id",
+        "query_id", "id", "fragment_id", "parent_id", "exchange_id", *payload
     )
 
 
-def _walk_trees(nodes: DataFrame, payload_col: str, visit,
-                out_schema: str, out_cols: list[str]) -> DataFrame:
+def _walk_trees(nodes: DataFrame, visit, out_schema: str,
+                out_cols: list[str], payload_col: str | None = None) -> DataFrame:
     """Accumulate each partition (queries never span partitions — see
     ``_colocated_nodes``), rebuild every query's (payload, children,
     roots) tree with plain dict loops, and let ``visit(qid, payload,
-    children, roots, rows)`` emit output rows. Child lists follow the
-    reference's edge rules: same-fragment parent_id edges plus
+    children, roots, rows)`` emit output rows. Child lists are pt1's edge
+    set: a ``parent_id`` edge only when the parent row is in the same
+    fragment (a cross-fragment or dangling ``parent_id`` is no edge), plus
     EXCHANGE -> fed-fragment-root edges; the root is the root fragment's
-    root operator (draw_plan.py:36)."""
+    root operator (draw_plan.py:36). Without a ``payload_col`` every
+    payload is None.
+
+    The walk buffers its partition's rows before emitting, because a
+    query's rows can straddle Arrow batch boundaries (the co-location
+    shuffle hashes by query_id but does not sort). The buffer is a few
+    scalars per operator row, smaller than the Arrow batches that
+    delivered them, and per-partition rows shrink as the cluster grows."""
     from collections.abc import Iterator  # noqa: PLC0415
+    from itertools import repeat  # noqa: PLC0415
 
     import pandas as pd  # noqa: PLC0415
 
     def walk_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         per_query: dict[str, list[tuple]] = {}
         for pdf in batches:
-            for qid, oid, parent, eid, p in zip(
-                pdf["query_id"], pdf["id"], pdf["parent_id"],
-                pdf["exchange_id"], pdf[payload_col],
+            for qid, oid, frag, parent, eid, p in zip(
+                pdf["query_id"], pdf["id"], pdf["fragment_id"],
+                pdf["parent_id"], pdf["exchange_id"],
+                pdf[payload_col] if payload_col else repeat(None),
             ):
-                per_query.setdefault(qid, []).append((int(oid), parent, eid, p))
+                per_query.setdefault(qid, []).append(
+                    (int(oid), frag, parent, eid, p))
         rows: list[tuple] = []
         for qid, items in per_query.items():
+            frag_of = {oid: frag for oid, frag, _, _, _ in items}
             payload = {}
             children: dict[int, list[int]] = {}
             roots = []
-            for oid, parent, eid, p in items:
+            for oid, frag, parent, eid, p in items:
                 payload[oid] = p
                 if not pd.isna(parent):
-                    children.setdefault(int(parent), []).append(oid)
+                    if frag_of.get(int(parent)) == frag:
+                        children.setdefault(int(parent), []).append(oid)
                 elif not pd.isna(eid):  # fragment root feeding an EXCHANGE
                     children.setdefault(int(eid), []).append(oid)
                 else:  # root fragment's root operator
@@ -171,6 +183,11 @@ def plan_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     overhead (a groupBy+applyInPandas variant paid ~10x in per-group
     DataFrame construction over 145k tiny groups; per-level join loops
     and lazy chained unions were 5-10x slower again)."""
+    return _paths_over(_colocated_nodes(spark, sf_dir, "name"))
+
+
+def _paths_over(nodes: DataFrame) -> DataFrame:
+    """pt2's walk over a co-located node frame carrying ``name``."""
 
     def visit(qid, names, children, roots, rows) -> None:
         def rec(oid: int, depth: int, path: str) -> None:
@@ -183,9 +200,9 @@ def plan_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             rec(root, 0, f"{root:03d}")
 
     return _walk_trees(
-        _colocated_nodes(spark, sf_dir, "name"), "name", visit,
+        nodes, visit,
         "query_id string, id bigint, depth int, path string, line string",
-        ["query_id", "id", "depth", "path", "line"],
+        ["query_id", "id", "depth", "path", "line"], "name",
     )
 
 
@@ -220,9 +237,9 @@ def critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((qid, best[0], best[1], best[2]))
 
     return _walk_trees(
-        _colocated_nodes(spark, sf_dir, "avg_time"), "avg_time", visit,
+        _colocated_nodes(spark, sf_dir, "avg_time"), visit,
         "query_id string, leaf_id bigint, path string, total_time bigint",
-        ["query_id", "leaf_id", "path", "total_time"],
+        ["query_id", "leaf_id", "path", "total_time"], "avg_time",
     )
 
 
@@ -350,21 +367,27 @@ def critical_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PT3_WALK = """
+# pt1's edge set, the one every plan oracle walks: a parent_id edge only
+# when the parent row is in the same fragment, plus EXCHANGE ->
+# fed-fragment-root edges
+_EDGES = """
         , edges AS (
-          SELECT o.query_id, p.id AS parent_op, o.id
+          SELECT o.query_id, p.id AS parent_op, o.id AS child_op
           FROM iwa_operators o
           JOIN iwa_operators p
             ON p.query_id = o.query_id AND p.id = o.parent_id
            AND p.fragment_id = o.fragment_id
           UNION ALL
-          SELECT f.query_id, f.exchange_id AS parent_op, o.id
+          SELECT f.query_id, f.exchange_id AS parent_op, o.id AS child_op
           FROM iwa_fragments f
           JOIN iwa_operators o
             ON o.query_id = f.query_id AND o.fragment_id = f.id
            AND o.parent_id IS NULL
           WHERE f.exchange_id IS NOT NULL
-        ),
+        )"""
+
+
+_PT3_WALK = _EDGES + """,
         walk AS (
           WITH RECURSIVE r AS (
             SELECT o.query_id, o.id, format('{:03d}', o.id) AS path,
@@ -375,12 +398,13 @@ _PT3_WALK = """
              AND f.exchange_id IS NULL
             WHERE o.parent_id IS NULL
             UNION ALL
-            SELECT e.query_id, e.id,
-                   r.path || '>' || format('{:03d}', e.id),
+            SELECT e.query_id, e.child_op,
+                   r.path || '>' || format('{:03d}', e.child_op),
                    r.total + o.avg_time
             FROM r JOIN edges e
               ON e.query_id = r.query_id AND e.parent_op = r.id
-            JOIN iwa_operators o ON o.query_id = e.query_id AND o.id = e.id
+            JOIN iwa_operators o
+              ON o.query_id = e.query_id AND o.id = e.child_op
           )
           SELECT * FROM r
         ),
@@ -391,21 +415,7 @@ _PT3_WALK = """
           FROM walk)"""
 
 
-_PT2_WALK = """
-        , edges AS (
-          SELECT o.query_id, p.id AS parent_op, o.id
-          FROM iwa_operators o
-          JOIN iwa_operators p
-            ON p.query_id = o.query_id AND p.id = o.parent_id
-           AND p.fragment_id = o.fragment_id
-          UNION ALL
-          SELECT f.query_id, f.exchange_id AS parent_op, o.id
-          FROM iwa_fragments f
-          JOIN iwa_operators o
-            ON o.query_id = f.query_id AND o.fragment_id = f.id
-           AND o.parent_id IS NULL
-          WHERE f.exchange_id IS NOT NULL
-        ),
+_PT2_WALK = _EDGES + """,
         walk AS (
           WITH RECURSIVE r AS (
             SELECT o.query_id, o.id, 0 AS depth,
@@ -416,14 +426,28 @@ _PT2_WALK = """
              AND f.exchange_id IS NULL
             WHERE o.parent_id IS NULL
             UNION ALL
-            SELECT e.query_id, e.id, r.depth + 1,
-                   r.path || '>' || format('{:03d}', e.id)
+            SELECT e.query_id, e.child_op, r.depth + 1,
+                   r.path || '>' || format('{:03d}', e.child_op)
             FROM r JOIN edges e
               ON e.query_id = r.query_id AND e.parent_op = r.id
           )
           SELECT * FROM r
         )
 """
+
+
+# pt4/pt6's plan-shape fingerprint per query
+_PLAN_FINGERPRINTS = """
+        , per_op AS (
+          SELECT query_id, id,
+                 CAST(id AS VARCHAR) || ':' || name || ':'
+                   || CAST(COALESCE(parent_id, -1) AS VARCHAR) AS tok
+          FROM iwa_operators),
+        per_q AS (
+          SELECT query_id,
+                 md5(string_agg(tok, '|' ORDER BY id)) AS fingerprint,
+                 COUNT(*) AS n_ops
+          FROM per_op GROUP BY query_id)"""
 
 
 ORACLES = {
@@ -441,16 +465,7 @@ ORACLES = {
         FROM nodes n
         JOIN iwa_operators o ON o.query_id = n.query_id AND o.id = n.id
         GROUP BY o.name"""),
-    "pt6_shape_runtime_drift": with_corpus("""
-        , per_op AS (
-          SELECT query_id, id,
-                 CAST(id AS VARCHAR) || ':' || name || ':'
-                   || CAST(COALESCE(parent_id, -1) AS VARCHAR) AS tok
-          FROM iwa_operators),
-        per_q AS (
-          SELECT query_id,
-                 md5(string_agg(tok, '|' ORDER BY id)) AS fingerprint
-          FROM per_op GROUP BY query_id),
+    "pt6_shape_runtime_drift": with_corpus(_PLAN_FINGERPRINTS + """,
         per_fc AS (
           SELECT p.fingerprint, q.cluster,
                  CAST(COUNT(*) AS BIGINT) AS n,
@@ -469,35 +484,14 @@ ORACLES = {
         FROM per_fc
         GROUP BY fingerprint
         HAVING COUNT(*) >= 2 AND MIN(mean_runtime) > 0"""),
-    "pt4_plan_fingerprints": with_corpus("""
-        , per_op AS (
-          SELECT query_id, id,
-                 CAST(id AS VARCHAR) || ':' || name || ':'
-                   || CAST(COALESCE(parent_id, -1) AS VARCHAR) AS tok
-          FROM iwa_operators),
-        per_q AS (
-          SELECT query_id,
-                 md5(string_agg(tok, '|' ORDER BY id)) AS fingerprint,
-                 COUNT(*) AS n_ops
-          FROM per_op GROUP BY query_id)
+    "pt4_plan_fingerprints": with_corpus(_PLAN_FINGERPRINTS + """
         SELECT fingerprint, n_ops, COUNT(*) AS n_queries,
                MIN(query_id) AS example_query_id
         FROM per_q GROUP BY 1, 2"""),
     "pt3_critical_path": with_corpus(_PT3_WALK + """
         SELECT query_id, leaf_id, path, total_time FROM ranked WHERE rn = 1"""),
-    "pt1_plan_edges": with_corpus("""
-        SELECT o.query_id, p.id AS parent_op, o.id AS child_op
-        FROM iwa_operators o
-        JOIN iwa_operators p
-          ON p.query_id = o.query_id AND p.id = o.parent_id
-         AND p.fragment_id = o.fragment_id
-        UNION ALL
-        SELECT f.query_id, f.exchange_id AS parent_op, o.id AS child_op
-        FROM iwa_fragments f
-        JOIN iwa_operators o
-          ON o.query_id = f.query_id AND o.fragment_id = f.id
-         AND o.parent_id IS NULL
-        WHERE f.exchange_id IS NOT NULL"""),
+    "pt1_plan_edges": with_corpus(_EDGES + """
+        SELECT query_id, parent_op, child_op FROM edges"""),
     "pt2_plan_paths": with_corpus(_PT2_WALK + """
         SELECT w.query_id, w.id, w.depth, w.path,
                repeat('  ', w.depth) || CAST(w.id AS VARCHAR) || ':' || o.name AS line
@@ -569,21 +563,7 @@ def plan_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["pt7_plan_motifs"] = with_corpus("""
-        , edges AS (
-          SELECT o.query_id, p.id AS parent_op, o.id AS child_op
-          FROM iwa_operators o
-          JOIN iwa_operators p
-            ON p.query_id = o.query_id AND p.id = o.parent_id
-           AND p.fragment_id = o.fragment_id
-          UNION ALL
-          SELECT f.query_id, f.exchange_id AS parent_op, o.id
-          FROM iwa_fragments f
-          JOIN iwa_operators o
-            ON o.query_id = f.query_id AND o.fragment_id = f.id
-           AND o.parent_id IS NULL
-          WHERE f.exchange_id IS NOT NULL
-        ),
+ORACLES["pt7_plan_motifs"] = with_corpus(_EDGES + """,
         named AS (
           SELECT e.query_id, e.parent_op, e.child_op,
                  p.name AS parent_name, c.name AS child_name
@@ -617,121 +597,43 @@ def plan_shape_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout-12 plan is a review flag regardless of runtime).
 
     Scale: ONE pass over the co-located node frame shared with pt2/pt3/
-    pt5 (``_colocated_nodes``): a plan tree is tiny and wholly contained
-    in one partition, so every metric — the root-closure node count and
-    depth (pt2's walk), the edge/fanout census (pt1's edge set, rebuilt
-    per query with the same same-fragment parent rule plus EXCHANGE ->
-    fed-fragment-root rule) — comes out of one plain-Python partition
-    walk that emits ONE ROW PER QUERY. The r15 optimization round
-    collapsed the previous four-frame composition (paths groupBy +
-    edges double groupBy + query-keyed join: 5 shuffles, two extra
-    corpus scans, and 145k path strings built only to be counted) into
-    this single shuffle-free pass over the cached frame; the oracle's
-    recursive-CTE walk is mirrored exactly (descent follows the CHECKED
-    edge set, base = root fragment's root operator).
+    pt5 (``_colocated_nodes``) through the same ``_walk_trees`` with no
+    payload: every metric — the root-closure node count and depth (pt2's
+    walk) and the edge/fanout census (pt1's edge set) — comes out of one
+    plain-Python partition walk that emits ONE ROW PER QUERY, with no
+    shuffle beyond the shared frame's co-location."""
+    return _shapes_over(_colocated_nodes(spark, sf_dir))
 
-    Memory bound of the partition walk (r15 verdict #5): the walk
-    buffers its partition's rows before emitting, because a query's
-    rows can straddle Arrow batch boundaries (the co-location shuffle
-    hashes by query_id but does not sort, so groups are not
-    batch-contiguous). The buffered state is FOUR SCALARS per operator
-    row (ids only — no names, no payloads), strictly smaller than the
-    Arrow batches the executor already materialized to deliver the same
-    rows; per-partition row count is corpus_operators /
-    defaultParallelism, which shrinks as the cluster grows, so the
-    bound scales with the partition, not the corpus. Streaming per
-    batch would require a per-partition sort by query_id (a new
-    within-partition sort over the shared cached frame) to make groups
-    contiguous — more work than the buffer it would save."""
-    import pandas as pd  # noqa: PLC0415
 
-    nodes = _colocated_nodes(spark, sf_dir, "name").select(
-        "query_id", "id", "fragment_id", "parent_id", "exchange_id"
-    )
-    out_cols = ["query_id", "n_nodes", "depth_max", "n_edges",
-                "max_fanout", "n_leaves"]
+def _shapes_over(nodes: DataFrame) -> DataFrame:
+    """pt8's walk over a co-located node frame."""
 
-    def shape_partition(batches):
-        per_query: dict[str, list[tuple]] = {}
-        for pdf in batches:
-            for qid, oid, frag, parent, eid in zip(
-                pdf["query_id"], pdf["id"], pdf["fragment_id"],
-                pdf["parent_id"], pdf["exchange_id"],
-            ):
-                per_query.setdefault(qid, []).append(
-                    (int(oid), frag, parent, eid)
-                )
-        rows: list[tuple] = []
-        for qid, items in per_query.items():
-            # pt1's edge set: same-fragment parent_id edges (parent row
-            # must exist) + EXCHANGE -> fed-fragment-root edges
-            frag_of = {oid: frag for oid, frag, _, _ in items}
-            children: dict[int, list[int]] = {}
-            roots = []
-            for oid, frag, parent, eid in items:
-                if not pd.isna(parent):
-                    p = int(parent)
-                    if p in frag_of and frag_of[p] == frag:
-                        children.setdefault(p, []).append(oid)
-                elif not pd.isna(eid):
-                    children.setdefault(int(eid), []).append(oid)
-                else:  # root fragment's root operator
-                    roots.append(oid)
-            n_nodes = 0
-            depth_max = 0
-            stack = [(root, 0) for root in roots]
-            while stack:
-                oid, depth = stack.pop()
-                n_nodes += 1
-                if depth > depth_max:
-                    depth_max = depth
-                for child in children.get(oid, ()):
-                    stack.append((child, depth + 1))
-            n_edges = sum(len(c) for c in children.values())
-            max_fanout = max((len(c) for c in children.values()), default=0)
-            n_parents = len(children)
-            rows.append((qid, n_nodes, depth_max, n_edges, max_fanout,
-                         n_nodes - n_parents))
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
+    def visit(qid, _payload, children, roots, rows) -> None:
+        n_nodes = 0
+        depth_max = 0
+        stack = [(root, 0) for root in roots]
+        while stack:
+            oid, depth = stack.pop()
+            n_nodes += 1
+            if depth > depth_max:
+                depth_max = depth
+            for child in children.get(oid, ()):
+                stack.append((child, depth + 1))
+        n_edges = sum(len(c) for c in children.values())
+        max_fanout = max((len(c) for c in children.values()), default=0)
+        rows.append((qid, n_nodes, depth_max, n_edges, max_fanout,
+                     n_nodes - len(children)))
 
-    return nodes.mapInPandas(
-        shape_partition,
-        schema="query_id string, n_nodes bigint, depth_max bigint, "
-               "n_edges bigint, max_fanout bigint, n_leaves bigint",
+    return _walk_trees(
+        nodes, visit,
+        "query_id string, n_nodes bigint, depth_max bigint, "
+        "n_edges bigint, max_fanout bigint, n_leaves bigint",
+        ["query_id", "n_nodes", "depth_max", "n_edges", "max_fanout",
+         "n_leaves"],
     )
 
 
-ORACLES["pt8_plan_shape_profile"] = with_corpus("""
-        , edges AS (
-          SELECT o.query_id, p.id AS parent_op, o.id
-          FROM iwa_operators o
-          JOIN iwa_operators p
-            ON p.query_id = o.query_id AND p.id = o.parent_id
-           AND p.fragment_id = o.fragment_id
-          UNION ALL
-          SELECT f.query_id, f.exchange_id AS parent_op, o.id
-          FROM iwa_fragments f
-          JOIN iwa_operators o
-            ON o.query_id = f.query_id AND o.fragment_id = f.id
-           AND o.parent_id IS NULL
-          WHERE f.exchange_id IS NOT NULL
-        ),
-        walk AS (
-          WITH RECURSIVE r AS (
-            SELECT o.query_id, o.id, 0 AS depth
-            FROM iwa_operators o
-            JOIN iwa_fragments f
-              ON f.query_id = o.query_id AND f.id = o.fragment_id
-             AND f.exchange_id IS NULL
-            WHERE o.parent_id IS NULL
-            UNION ALL
-            SELECT e.query_id, e.id, r.depth + 1
-            FROM r JOIN edges e
-              ON e.query_id = r.query_id AND e.parent_op = r.id
-          )
-          SELECT * FROM r
-        ),
+ORACLES["pt8_plan_shape_profile"] = with_corpus(_PT2_WALK + """,
         prof AS (
           SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_nodes,
                  CAST(MAX(depth) AS BIGINT) AS depth_max

@@ -637,10 +637,7 @@ def _parse_one(blob: str, tag: str):
 
 
 def _parse_rows(which: str, blobs, tags) -> list[tuple]:
-    """Decode+parse one batch of (blob, tag) pairs into output rows.
-    Kept separate from the pandas framing in ``batch_parser`` so worker
-    variants (the benched-and-removed mapInArrow twin was one) can share
-    the parse core without touching the emission format."""
+    """Decode+parse one batch of (blob, tag) pairs into output rows."""
     rows: list[tuple] = []
     for blob, tag in zip(blobs, tags):
         parsed = _parse_one(blob, tag)

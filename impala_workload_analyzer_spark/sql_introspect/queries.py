@@ -135,10 +135,8 @@ def feature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     each only its own columns; q1 stays the one live, oracle-checked parse."""
     from ..catalog import land  # noqa: PLC0415
 
-    # shuffle the narrow parse output by the bucket key first (as the ingest
-    # dedup does), or every parse task writes one small file per bucket
     return land(spark, "features", sf_dir, "sql_features",
-                lambda: sql_features(spark, sf_dir).repartition("query_id"))
+                lambda: sql_features(spark, sf_dir))
 
 
 def features_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
+import re
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from impala_workload_analyzer_spark.cache_util import _SOURCES, cache_dir, fingerprint
+from impala_workload_analyzer_spark.catalog import N_BUCKETS, write_bucketed
 from impala_workload_analyzer_spark.corpus import (
     corpus_fragments,
     corpus_operators,
@@ -75,7 +78,7 @@ def test_cache_dir_keeps_every_derived_data_path():
     """One path rule for every disk cache kind, byte-identical to the
     layout the committed caches (and the export readers) already use."""
     for kind, parts, want in (
-        ("corpus", (), ".corpus_cache/sf0.01"),
+        ("corpus", ("operators",), ".corpus_cache/sf0.01/operators"),
         ("profiles", (), ".profiles_cache/sf0.01"),
         ("ingest", ("fragments",), ".ingest_cache/sf0.01/fragments"),
         ("features", ("sql_features",), ".features_cache/sf0.01/sql_features"),
@@ -109,3 +112,63 @@ def test_each_cache_kind_fingerprints_its_upstream_sources():
         assert set(_SOURCES[up]) < set(_SOURCES[down]), (up, down)
     assert [k for k in chain if "sql_introspect/queries.py" in _SOURCES[k]] \
         == ["features"]
+
+
+def _bucket_ids(path: str) -> list[str]:
+    """The bucket id (``_000NN`` suffix) of every part file under ``path``."""
+    return [re.search(r"_(\d{5})\.c\d+", os.path.basename(p)).group(1)
+            for p in glob.glob(os.path.join(path, "part-*"))]
+
+
+def test_write_bucketed_lands_one_file_per_bucket(spark, tmp_path):
+    """The layout follows the data, not the session: with 3 shuffle
+    partitions and a 7-partition input (neither divides N_BUCKETS) every
+    bucket still lands in exactly one file."""
+    path = str(tmp_path / "probe")
+    df = spark.range(0, 2000, numPartitions=7).selectExpr(
+        "concat('q', CAST(id % 499 AS STRING)) AS query_id", "id")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        write_bucketed(df, path, "layout_probe")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.sql("DROP TABLE IF EXISTS layout_probe")
+    ids = _bucket_ids(path)
+    assert len(ids) == len(set(ids)) == N_BUCKETS, sorted(ids)
+    assert spark.read.parquet(path).count() == 2000
+
+
+def test_committed_bucketed_datasets_hold_one_file_per_bucket():
+    """Every committed bucketed dataset (corpus, ingest, feature store)
+    holds one part file per bucket id."""
+    datasets = [d for kind in ("corpus", "ingest", "features")
+                for d in glob.glob(os.path.join(_REPO, f".{kind}_cache",
+                                                "sf0.0*1", "*", ""))]
+    assert {os.path.relpath(d, _REPO).split(os.sep)[0] for d in datasets} \
+        == {".corpus_cache", ".ingest_cache", ".features_cache"}
+    for d in datasets:
+        ids = _bucket_ids(d)
+        assert ids and len(ids) == len(set(ids)), (d, len(ids), len(set(ids)))
+
+
+def _calls(tree: ast.AST, name: str) -> bool:
+    return any(isinstance(n, ast.Call) and name in (
+        getattr(n.func, "attr", None), getattr(n.func, "id", None))
+        for n in ast.walk(tree))
+
+
+def test_one_landing_path():
+    """Only ``catalog`` lays out and registers a bucketed table, and only
+    ``catalog`` (derived tables) and the profile renderer (text logs)
+    stamp a disk cache, so a new derived table cannot grow its own
+    landing code."""
+    pkg = os.path.join(_REPO, "impala_workload_analyzer_spark")
+    found: dict[str, set[str]] = {}
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        tree = ast.parse(Path(path).read_text())
+        for name in ("bucketBy", "saveAsTable", "build_once"):
+            if _calls(tree, name):
+                found.setdefault(name, set()).add(os.path.relpath(path, pkg))
+    assert found["bucketBy"] == found["saveAsTable"] == {"catalog.py"}
+    assert found["build_once"] == {"catalog.py", "sources/profile_render.py"}

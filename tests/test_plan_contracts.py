@@ -56,6 +56,30 @@ def test_pt2_conserves_every_operator(spark, sf_dir):
     assert pt2.count() == corpus_operators(spark, sf_dir).count()
 
 
+def test_plan_walks_follow_pt1_edges(spark):
+    # an operator whose parent_id names an operator in ANOTHER fragment is
+    # no pt1 edge (and no root), so neither pt2 nor pt8 may reach it
+    from impala_workload_analyzer_spark.plans.draw_plan import _paths_over, _shapes_over
+
+    # (id, fragment_id, parent_id, exchange_id of its fragment, name)
+    ops = [(0, 0, None, None, "AGGREGATE"), (1, 0, 0, None, "HASH JOIN"),
+           (2, 0, 1, None, "EXCHANGE"), (3, 1, None, 2, "SCAN HDFS"),
+           (4, 1, 3, 2, "SCAN HDFS"), (5, 1, 1, 2, "SCAN HDFS"),
+           (6, 1, 99, 2, "SCAN HDFS")]
+    nodes = spark.createDataFrame(
+        [("q", *op) for op in ops],
+        "query_id string, id bigint, fragment_id bigint, parent_id bigint, "
+        "exchange_id bigint, name string",
+    ).coalesce(1)
+    # pt1's edges: 0>1, 1>2 (same fragment), 2>3 (EXCHANGE), 3>4; op 5's
+    # parent is in fragment 0 and op 6's parent does not exist
+    reach = {0, 1, 2, 3, 4}
+
+    assert {r["id"] for r in _paths_over(nodes).collect()} == reach
+    (shape,) = _shapes_over(nodes).collect()
+    assert (shape["n_nodes"], shape["n_edges"]) == (len(reach), 4)
+
+
 def test_plan_node_frame_is_evicted_with_the_session_frames(spark, sf_dir):
     # the shared pt2/pt3/pt5 node frame is session state like every other
     # persisted intermediate: evicting the session frames must unpersist it
